@@ -464,10 +464,12 @@ def q_phrase_search(spark, sf_dir):
 
 def q_boolean_search(spark, sf_dir):
     """Boolean retrieval (+must -must_not should — Lucene BooleanQuery
-    semantics, operators/phrase.py): must = posting intersection, must_not
-    = anti-join, ranking = block-max WAND BM25 over must+should with the
-    candidate set cogrouped into the scatter. Oracle re-derives the same
-    filter + GLOBAL-df BM25 rank in SQL."""
+    semantics, operators/phrase.py): candidates = one groupBy(doc_id)
+    aggregate over a single pruned scan of the must + must_not postings
+    (every must term held, no must_not term held), ranking = block-max WAND
+    BM25 over must+should with the candidate set cogrouped into the
+    scatter. Oracle re-derives the same filter + GLOBAL-df BM25 rank in
+    SQL."""
     from pears_fruit_fly_spark.operators.phrase import search_boolean
 
     index_dir, vocab = _build_query_index(spark, sf_dir, "pears_idx_bool_")
@@ -676,12 +678,14 @@ _RANK_DICT_LITERAL_MAX = 4096
 
 def _rank_dict(spark, sf_dir) -> dict[str, int] | None:
     """{term: alphabetic 1-based rank} via one tiny collect, or None when
-    the dictionary exceeds the literal-map cap. Rank order matches
-    _term_ranks exactly: terms are [a-z0-9]+ so Python's code-point sort
-    equals Spark/DuckDB binary string ordering."""
+    the dictionary exceeds the literal-map cap. The collect stops at cap+1
+    terms, so the driver never holds more than that of the vocabulary.
+    Rank order matches _term_ranks exactly: terms are [a-z0-9]+ so Python's
+    code-point sort equals Spark/DuckDB binary string ordering."""
     terms = [
         r["term"]
-        for r in _tokens(spark, sf_dir).select("term").distinct().collect()
+        for r in _tokens(spark, sf_dir).select("term").distinct()
+        .limit(_RANK_DICT_LITERAL_MAX + 1).collect()
     ]
     if len(terms) > _RANK_DICT_LITERAL_MAX:
         return None

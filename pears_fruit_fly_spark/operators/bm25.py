@@ -239,6 +239,26 @@ def open_index(spark: SparkSession, index_dir: str):
     return _INDEX_CACHE[index_dir][1:]
 
 
+def lookup_terms(
+    spark: SparkSession, index_dir: str, term_ids
+) -> dict[int, tuple[int, int]]:
+    """{term_id: (df, term_bucket)} for the given terms that have postings.
+
+    Zero Spark jobs while the vocabulary fits _DRIVER_STATS_MAX_TERMS (the
+    stats ride in driver memory); above it, ONE small collect over the
+    persisted term_stats table (term_bucket precomputed at build time —
+    postings.py stage 1 — so the same lookup yields the pruning buckets)."""
+    _, _, term_stats, driver_stats, *_ = open_index(spark, index_dir)
+    if driver_stats is not None:
+        return {t: driver_stats[t] for t in term_ids if t in driver_stats}
+    return {
+        int(r["term_id"]): (int(r["df"]), int(r["term_bucket"]))
+        for r in term_stats.filter(F.col("term_id").isin(list(term_ids)))
+        .select("term_id", "df", "term_bucket")
+        .collect()
+    }
+
+
 def query_term_counts(query_text: str, vocab: Vocab) -> dict[int, int]:
     """Query terms → {term_id: query_tf}; OOV terms dropped."""
     ids = vocab.encode(whitespace_tokenize(query_text.replace("\n", " ")))
@@ -551,7 +571,7 @@ def bm25_topk_wand(
     correctness harness exercises. Disabled automatically when the
     tombstone set exceeds the driver cap or candidates come as a DataFrame.
     """
-    info, postings, term_stats, driver_stats, tombstones, tomb_count, tomb_df = (
+    info, postings, _, _, tombstones, tomb_count, tomb_df = (
         open_index(spark, index_dir)
     )
     # tombstones is None either when there are none, or when the set is too
@@ -567,21 +587,9 @@ def bm25_topk_wand(
         return spark.createDataFrame([], SCORE_SCHEMA)
 
     term_ids = sorted(qcounts)
-    if driver_stats is not None:
-        # zero-job lookup (small-vocab index: stats cached on the driver)
-        found = [(t, *driver_stats[t]) for t in term_ids if t in driver_stats]
-        stats = {t: df_ for t, df_, _ in found}
-        buckets = sorted({bk for _, _, bk in found})
-    else:
-        # ONE tiny lookup job returns df AND the pruning bucket per term
-        # (term_bucket precomputed at build time — postings.py stage 1)
-        stat_rows = (
-            term_stats.filter(F.col("term_id").isin(term_ids))
-            .select("term_id", "df", "term_bucket")
-            .collect()
-        )
-        stats = {int(r["term_id"]): int(r["df"]) for r in stat_rows}
-        buckets = sorted({int(r["term_bucket"]) for r in stat_rows})
+    found = lookup_terms(spark, index_dir, term_ids)
+    stats = {t: df_ for t, (df_, _) in found.items()}
+    buckets = sorted({bk for _, bk in found.values()})
     weights = {
         t: qcounts[t] * idf(n_docs, stats.get(t, 0)) for t in term_ids if t in stats
     }
@@ -837,7 +845,7 @@ def bm25_topk_wand_batch(
     """
     from pyspark.sql.window import Window
 
-    info, postings, term_stats, driver_stats, tombstones, tomb_count, tomb_df = (
+    info, postings, _, _, tombstones, tomb_count, tomb_df = (
         open_index(spark, index_dir)
     )
     tomb_distributed = tomb_count > 0 and tombstones is None
@@ -851,15 +859,7 @@ def bm25_topk_wand_batch(
     if not all_terms:
         return spark.createDataFrame([], BATCH_SCORE_SCHEMA)
 
-    if driver_stats is not None:
-        found = {t: driver_stats[t] for t in all_terms if t in driver_stats}
-    else:
-        found = {
-            int(r["term_id"]): (int(r["df"]), int(r["term_bucket"]))
-            for r in term_stats.filter(F.col("term_id").isin(all_terms))
-            .select("term_id", "df", "term_bucket")
-            .collect()
-        }
+    found = lookup_terms(spark, index_dir, all_terms)
     if not found:
         return spark.createDataFrame([], BATCH_SCORE_SCHEMA)
     buckets = sorted({bk for _, bk in found.values()})

@@ -23,9 +23,12 @@ Execution shape — 100 TB first:
   the doc, df = number of matching docs (computed on the result itself via
   a broadcast 1-row aggregate — no driver hop, no single-partition window),
   dl travels in the posting blocks as always. Rank = score desc, doc asc.
-* Boolean queries compose existing primitives: must = posting-list
-  intersection (groupBy doc HAVING count(distinct term) = n), must_not =
-  left_anti join, phrases = phrase_match, scoring = the block-max WAND
+* Boolean candidates come from ONE partition-pruned decode scan of the
+  must + must_not terms (or, with no must terms, the should-universe +
+  must_not terms) and ONE groupBy(doc_id) aggregate with no term cap:
+  size(collect_set) of the kept terms per doc must equal the must count
+  (or be > 0 on the universe path), and max(term IN must_not) must be
+  false. Phrases intersect via phrase_match; scoring = the block-max WAND
   top-k with the candidate set COGROUPED into the scatter
   (bm25.bm25_topk_wand(candidate_df=...) — the scale path, no driver
   materialization).
@@ -41,7 +44,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from pears_fruit_fly_spark.functions.tokenizer import whitespace_tokenize
 from pears_fruit_fly_spark.functions.vocab import Vocab
-from pears_fruit_fly_spark.operators.bm25 import idf, open_index
+from pears_fruit_fly_spark.operators.bm25 import idf, lookup_terms, open_index
 
 MATCH_SCHEMA = StructType(
     [
@@ -81,9 +84,7 @@ def phrase_match(
     text's token sequence. Requires a store_positions build; raises
     otherwise. Tombstoned docs are masked (driver-size sets inside the
     decode UDF, larger sets via distributed anti-join)."""
-    info, postings, term_stats, driver_stats, tombstones, tomb_count, tomb_df = (
-        open_index(spark, index_dir)
-    )
+    info, postings, _, _, tombstones, _, tomb_df = open_index(spark, index_dir)
     if not info.get("store_positions", False):
         raise ValueError(
             f"index at {index_dir} was built without store_positions=True — "
@@ -96,22 +97,11 @@ def phrase_match(
     n_offsets = sum(len(v) for v in offsets.values())
     term_ids = sorted(offsets)
 
-    if driver_stats is not None:
-        buckets = sorted(
-            {driver_stats[t][1] for t in term_ids if t in driver_stats}
-        )
-        missing = [t for t in term_ids if t not in driver_stats]
-    else:
-        rows = (
-            term_stats.filter(F.col("term_id").isin(term_ids))
-            .select("term_id", "term_bucket").collect()
-        )
-        found = {int(r["term_id"]): int(r["term_bucket"]) for r in rows}
-        buckets = sorted(set(found.values()))
-        missing = [t for t in term_ids if t not in found]
-    if missing:
+    found = lookup_terms(spark, index_dir, term_ids)
+    if len(found) < len(term_ids):
         # a phrase term with zero postings can never fill its slot
         return spark.createDataFrame([], MATCH_SCHEMA)
+    buckets = sorted({bk for _, bk in found.values()})
 
     # partition-pruned scan of exactly the phrase terms' buckets
     blocks = postings.filter(
@@ -277,100 +267,32 @@ def parse_query(query: str) -> dict:
     }
 
 
-def _docs_with_terms(
-    spark: SparkSession, index_dir: str, term_ids: list[int], require_all: bool
-) -> DataFrame | None:
-    """doc_ids containing all (require_all) / any of the given terms —
-    decoded ids only (no tf/dl/positions), partition-pruned. None when no
-    term has postings and require_all is False."""
-    info, postings, term_stats, driver_stats, *_ = open_index(spark, index_dir)
-    if driver_stats is not None:
-        found = {t: driver_stats[t][1] for t in term_ids if t in driver_stats}
-    else:
-        found = {
-            int(r["term_id"]): int(r["term_bucket"])
-            for r in term_stats.filter(F.col("term_id").isin(term_ids))
-            .select("term_id", "term_bucket").collect()
-        }
-    if require_all and len(found) < len(set(term_ids)):
-        return spark.createDataFrame([], "doc_id long")  # a term matches nothing
-    if not found:
-        return None
-    buckets = sorted(set(found.values()))
-    blocks = postings.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term_id").isin(list(found))
-    ).select("term_id", "n", "first_doc", "tfs", "doc_gaps", "dls")
-
-    def _ids(batches):
-        from pears_fruit_fly_spark.operators.codec import decode_blocks_batch
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids, _, _, rix = decode_blocks_batch(
-                pdf["n"].to_numpy(), pdf["first_doc"].to_numpy(),
-                pdf["doc_gaps"], pdf["tfs"], pdf["dls"],
-            )
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "term_id": pdf["term_id"].to_numpy()[rix].astype(np.int32),
-            })
-
-    pairs = blocks.mapInPandas(_ids, "doc_id long, term_id int")
-    if require_all:
-        # countDistinct dedups (doc,term) repeats across blocks/segments
-        # itself — no pre-dedup exchange needed
-        n = len(set(term_ids) & set(found))
-        return (
-            pairs.groupBy("doc_id")
-            .agg(F.countDistinct("term_id").alias("nt"))
-            .filter(F.col("nt") == n)
-            .select("doc_id")
-        )
-    return pairs.select("doc_id").distinct()
-
-
-def _fused_candidates(
+def _candidates(
     spark: SparkSession,
     index_dir: str,
     must_ids: list[int],
     not_ids: list[int],
     any_ids: list[int],
-) -> DataFrame | None:
-    """Candidate doc_ids for (ALL must) / (ANY any, when no must) minus
-    (ANY not) in ONE partition-pruned decode scan + ONE aggregate.
+) -> DataFrame:
+    """doc_ids holding ALL must terms (or, with no must terms, ANY of
+    any_ids) and NO must_not term, from ONE partition-pruned decode scan and
+    ONE groupBy(doc_id) aggregate, for any number of terms.
 
-    Each term gets a bit; per doc a single bit_or collapses duplicate
-    (doc, term) rows across blocks/segments, then a codegen'd mask test
-    replaces the separate intersect aggregate, exclude-distinct and
-    left_anti join of the unfused form (guide §2.4 — 3 exchanges → 1).
-    Returns None when the caller should take the unfused path (mask baked
-    for ≤60 required/optional terms; exclusion terms all share one bit)."""
-    req = sorted(set(must_ids))
-    opt = [] if req else sorted(set(any_ids))
-    if len(req) + len(opt) > 60:
-        return None
-    excl = sorted(set(not_ids) - set(req) - set(opt))
-
-    info, postings, term_stats, driver_stats, *_ = open_index(spark, index_dir)
-    all_ids = sorted(set(req) | set(opt) | set(excl))
-    if driver_stats is not None:
-        found = {t: driver_stats[t][1] for t in all_ids if t in driver_stats}
-    else:
-        found = {
-            int(r["term_id"]): int(r["term_bucket"])
-            for r in term_stats.filter(F.col("term_id").isin(all_ids))
-            .select("term_id", "term_bucket").collect()
-        }
-    empty = spark.createDataFrame([], "doc_id long")
-    if req and any(t not in found for t in req):
-        return empty  # a must-term with no postings matches nothing
-    if not req and not any(t in found for t in opt):
-        return empty  # no universe to subtract from
-    buckets = sorted({found[t] for t in all_ids if t in found})
-    scan_ids = [t for t in all_ids if t in found]
+    Per doc, size(collect_set(kept term)) counts the distinct kept terms
+    (duplicate (doc, term) rows across blocks/segments collapse in the set)
+    and max(term IN not) flags an excluded term. Every must_not term stays
+    in the scan even when it is also a kept term, so ``+a -a`` is empty and
+    ``a b -a`` is the b-docs without a (Lucene semantics)."""
+    keep = sorted(set(must_ids) or set(any_ids))
+    found = lookup_terms(spark, index_dir, sorted(set(keep) | set(not_ids)))
+    keep_found = [t for t in keep if t in found]
+    if not keep_found or (must_ids and len(keep_found) < len(keep)):
+        # a must term with no postings, or an empty should-universe
+        return spark.createDataFrame([], "doc_id long")
+    _, postings, *_ = open_index(spark, index_dir)
     blocks = postings.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term_id").isin(scan_ids)
+        F.col("term_bucket").isin(sorted({bk for _, bk in found.values()}))
+        & F.col("term_id").isin(list(found))
     ).select("term_id", "n", "first_doc", "tfs", "doc_gaps", "dls")
 
     def _ids(batches):
@@ -388,25 +310,17 @@ def _fused_candidates(
                 "term_id": pdf["term_id"].to_numpy()[rix].astype(np.int32),
             })
 
-    pairs = blocks.mapInPandas(_ids, "doc_id long, term_id int")
-    keep = req if req else opt
-    bit = None
-    for i, t in enumerate(keep):
-        clause = F.when(F.col("term_id") == t, F.lit(1 << i))
-        bit = clause if bit is None else bit.when(F.col("term_id") == t,
-                                                 F.lit(1 << i))
-    excl_bit = 1 << 62
-    for t in excl:
-        bit = bit.when(F.col("term_id") == t, F.lit(excl_bit))
-    bit = bit.otherwise(F.lit(0))
-    agg = pairs.groupBy("doc_id").agg(F.bit_or(bit).alias("m"))
-    if req:
-        want = (1 << len(req)) - 1
-        cond = (F.col("m").bitwiseAND(F.lit(want)) == want)
-    else:
-        cond = (F.col("m").bitwiseAND(F.lit((1 << len(opt)) - 1)) != 0)
-    cond = cond & (F.col("m").bitwiseAND(F.lit(excl_bit)) == 0)
-    return agg.filter(cond).select("doc_id")
+    term = F.col("term_id")
+    agg = (
+        blocks.mapInPandas(_ids, "doc_id long, term_id int")
+        .groupBy("doc_id")
+        .agg(
+            F.size(F.collect_set(F.when(term.isin(keep_found), term))).alias("n"),
+            F.max(term.isin([t for t in not_ids if t in found])).alias("x"),
+        )
+    )
+    hit = (F.col("n") == len(keep)) if must_ids else (F.col("n") > 0)
+    return agg.filter(hit & ~F.col("x")).select("doc_id")
 
 
 def search_boolean(
@@ -418,13 +332,16 @@ def search_boolean(
 ) -> DataFrame:
     """Boolean retrieval + BM25 ranking → (doc_id, score), score desc/doc asc.
 
-    Clause semantics (Lucene BooleanQuery): must/phrases FILTER the
-    candidate set (posting intersection / positional match), must_not
-    subtracts (left_anti), and ranking is BM25 over must+should terms via
-    the block-max WAND top-k with the candidate set cogrouped into the
-    scatter. A query with only should-terms and no filters degrades to
-    plain WAND (no candidate set at all — the fast common case). Phrase
-    clauses require a store_positions build."""
+    Clause semantics (Lucene BooleanQuery): must terms, must_not terms and
+    phrases FILTER the candidate set — must/must_not through one _candidates
+    aggregate (docs holding every must term and no must_not term; with no
+    must terms, the in-vocab phrase words stand in as the required set, or
+    else the scored must+should OR-universe), phrases through positional
+    match, not-phrases by left_anti — and ranking is BM25 over must+should
+    terms via the block-max WAND top-k with the candidate set cogrouped
+    into the scatter. A query with only should-terms and no filters
+    degrades to plain WAND (no candidate set at all — the fast common
+    case). Phrase clauses require a store_positions build."""
     from pears_fruit_fly_spark.operators.bm25 import bm25_topk_wand
 
     clauses = parse_query(query) if isinstance(query, str) else dict(query)
@@ -437,46 +354,30 @@ def search_boolean(
     def tid(tok: str):
         return vocab.term_to_id.get(tok)
 
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    def empty() -> DataFrame:
+        return spark.createDataFrame([], "doc_id long, score double")
+
     must_ids = [tid(t) for t in must]
     if any(t is None for t in must_ids):
-        return empty  # an OOV must-term matches nothing
+        return empty()  # an OOV must-term matches nothing
     not_ids = [t for t in (tid(x) for x in must_not) if t is not None]
 
     cand: DataFrame | None = None
-    fused_not = False  # True when the NOT-terms rode inside the fused agg
-    if must_ids:
-        cand = _fused_candidates(spark, index_dir, must_ids, not_ids, [])
-        if cand is not None:
-            fused_not = True
-        else:  # >60 must terms: unfused fallback
-            cand = _docs_with_terms(spark, index_dir, must_ids,
-                                    require_all=True)
+    if must_ids or not_ids or (not_phrases and not phrases):
+        # required set: the must terms, else every in-vocab phrase word
+        # (each phrase match holds them all); with neither, NOT subtracts
+        # from the docs holding a scoring term (exactly what would be
+        # scored)
+        required = must_ids or [
+            t for p in phrases for t in (_phrase_offsets(p, vocab) or ())
+        ]
+        scoring = [t for t in (tid(x) for x in must + should) if t is not None]
+        if not (required or scoring):
+            return empty()
+        cand = _candidates(spark, index_dir, required, not_ids, scoring)
     for p in phrases:
-        # excluding NOT-docs before vs after the phrase intersect is
-        # equivalent: (A \ E) ∩ P == (A ∩ P) \ E
         pm = phrase_match(spark, index_dir, p, vocab).select("doc_id")
         cand = pm if cand is None else cand.join(pm, "doc_id")
-    if (not_ids or not_phrases) and cand is None:
-        # NOT needs a set to subtract from: docs holding at least one
-        # scoring term (the OR universe — exactly what would be scored)
-        scoring = [t for t in (tid(x) for x in set(must + should))
-                   if t is not None]
-        if not scoring:
-            return empty
-        fc = _fused_candidates(spark, index_dir, [], not_ids, scoring)
-        if fc is not None:
-            cand = fc
-            fused_not = True
-        else:
-            cand = _docs_with_terms(spark, index_dir, scoring,
-                                    require_all=False)
-            if cand is None:
-                return empty
-    if not_ids and not fused_not:
-        exclude = _docs_with_terms(spark, index_dir, not_ids, require_all=False)
-        if exclude is not None:
-            cand = cand.join(exclude, "doc_id", "left_anti")
     for p in not_phrases:
         cand = cand.join(
             phrase_match(spark, index_dir, p, vocab).select("doc_id"),
@@ -488,7 +389,7 @@ def search_boolean(
         # pure filter query: every candidate "matches equally" — score 0,
         # deterministic doc_id order; deleted docs masked like every path
         if cand is None:
-            return empty
+            return empty()
         _, _, _, _, _, tomb_count, _ = open_index(spark, index_dir)
         if tomb_count > 0:
             from pears_fruit_fly_spark.operators.postings import (

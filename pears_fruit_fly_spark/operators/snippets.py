@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 from pears_fruit_fly_spark.functions.vocab import Vocab
 from pears_fruit_fly_spark.operators.bm25 import (
     idf,
+    lookup_terms,
     open_index,
     query_term_counts,
 )
@@ -59,7 +60,7 @@ def snippet_spans(
     """Best snippet window per candidate doc → (doc_id, snip_start,
     snip_score). Docs with no query-term hit produce no row. Requires a
     store_positions build."""
-    info, postings, term_stats, driver_stats, tombstones, _, tomb_df = (
+    info, postings, _, _, tombstones, _, tomb_df = (
         open_index(spark, index_dir)
     )
     if not info.get("store_positions", False):
@@ -73,17 +74,9 @@ def snippet_spans(
     term_ids = sorted(qcounts)
     n_docs = info["n_docs"]
 
-    if driver_stats is not None:
-        found = {t: driver_stats[t] for t in term_ids if t in driver_stats}
-        weights = {t: idf(n_docs, df_) for t, (df_, _) in found.items()}
-        buckets = sorted({bk for _, bk in found.values()})
-    else:
-        rows = (
-            term_stats.filter(F.col("term_id").isin(term_ids))
-            .select("term_id", "df", "term_bucket").collect()
-        )
-        weights = {int(r["term_id"]): idf(n_docs, int(r["df"])) for r in rows}
-        buckets = sorted({int(r["term_bucket"]) for r in rows})
+    found = lookup_terms(spark, index_dir, term_ids)
+    weights = {t: idf(n_docs, df_) for t, (df_, _) in found.items()}
+    buckets = sorted({bk for _, bk in found.values()})
     if not weights:
         return spark.createDataFrame([], SPAN_SCHEMA)
 

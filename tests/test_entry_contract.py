@@ -88,3 +88,21 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert {"doc_id", "score", "rank"} <= set(df.columns)
+
+
+def test_rank_dict_past_cap_returns_none(spark, tmp_path):
+    """A dictionary over the literal-map cap yields None (the rank-dict
+    queries then take the join/agg form); one at the cap still maps."""
+    cap = entrymod._RANK_DICT_LITERAL_MAX
+    for n_terms, want_none in ((cap + 50, True), (cap, False)):
+        sf_dir = str(tmp_path / f"sf{n_terms}")
+        words = [f"w{i}" for i in range(n_terms)]
+        spark.createDataFrame(
+            [(d, " ".join(words[d::10])) for d in range(10)],
+            "doc_id long, text string",
+        ).write.parquet(f"{sf_dir}/documents.parquet")
+        ranks = entrymod._rank_dict(spark, sf_dir)
+        if want_none:
+            assert ranks is None
+        else:
+            assert ranks == {w: i + 1 for i, w in enumerate(sorted(words))}

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from pears_fruit_fly_spark.config import PostingsConfig
 from pears_fruit_fly_spark.operators.bm25 import idf
@@ -312,46 +314,109 @@ def test_wand_ignores_positions_column(spark, vocab, pos_index):
     assert got  # non-empty, deterministic
 
 
+def _doc_terms(vocab) -> dict[int, set[int]]:
+    """doc_id -> the in-vocab term ids of its raw token list."""
+    return {
+        d: {vocab.term_to_id[t] for t in txt.replace("\n", " ").split(" ")
+            if t in vocab.term_to_id}
+        for d, txt in DOCS
+    }
 
-def test_fused_candidates_match_unfused(spark, vocab, pos_index):
-    """The r6 bit-mask candidate aggregate must produce exactly the set the
-    unfused intersect/distinct/anti-join composition produced, for every
-    clause shape it fuses (must-only, must+not, any+not, missing terms)."""
-    from pears_fruit_fly_spark.operators.phrase import (
-        _docs_with_terms,
-        _fused_candidates,
-    )
+
+def test_candidates_match_set_reference(spark, vocab, pos_index):
+    """The boolean candidate aggregate equals a set reference over the raw
+    token lists for every clause shape: must / any-universe, must_not terms
+    that overlap must or should (Lucene: an excluded term always excludes),
+    terms with no postings, and more terms than any fixed-width mask."""
+    from pears_fruit_fly_spark.operators.phrase import _candidates
 
     t = {f"t{i}": vocab.term_to_id[f"t{i}"] for i in range(10)}
+    terms = _doc_terms(vocab)
+    absent = 999999  # an id with no postings
 
-    def unfused(must, nots, anys):
-        if must:
-            cand = _docs_with_terms(spark, pos_index, must, require_all=True)
-        else:
-            cand = _docs_with_terms(spark, pos_index, anys, require_all=False)
-            if cand is None:
-                return set()
-        if nots:
-            excl = _docs_with_terms(spark, pos_index, nots, require_all=False)
-            if excl is not None:
-                cand = cand.join(excl, "doc_id", "left_anti")
-        return {r["doc_id"] for r in cand.collect()}
+    def reference(must, nots, anys):
+        return {
+            d for d, held in terms.items()
+            if (set(must) <= held if must else set(anys) & held)
+            and not set(nots) & held
+        }
 
+    no_postings = sorted(set(range(vocab.size)) - set(t.values()))
     cases = [
         ([t["t1"], t["t2"]], [], []),                 # must only
         ([t["t1"], t["t2"]], [t["t9"]], []),          # must + not
         ([t["t1"]], [t["t3"], t["t9"]], []),          # must + 2 nots
         ([], [t["t3"]], [t["t2"], t["t5"]]),          # any-universe + not
         ([], [], [t["t2"]]),                          # any only
-        ([t["t1"], 999999], [], []),                  # missing must term
-        ([], [t["t9"]], [999999]),                    # missing any universe
+        ([t["t1"], absent], [], []),                  # missing must term
+        ([], [t["t9"]], [absent]),                    # missing any universe
+        ([t["t1"]], [t["t1"]], []),                   # +t1 -t1
+        ([], [t["t1"]], [t["t1"], t["t2"]]),          # t1 t2 -t1
+        ([], [t["t5"]], [t["t2"], t["t5"]]),          # not term also should
+        ([t["t1"], t["t2"]], [t["t2"], t["t9"]], []), # not term also must
+        ([t["t1"]], [absent], []),                    # OOV must_not term
+        ([t["t1"], t["t2"]] * 35, [t["t9"]], []),     # 70 must terms (dups)
+        ([t["t1"]] + no_postings[:69], [], []),       # 70 distinct must terms
+        ([], [t["t9"]], list(t.values()) + no_postings[:60]),  # 70 any terms
     ]
     for must, nots, anys in cases:
-        fused = _fused_candidates(spark, pos_index, must, nots, anys)
-        assert fused is not None, (must, nots, anys)
-        got = {r["doc_id"] for r in fused.collect()}
-        assert got == unfused(must, nots, anys), (must, nots, anys)
+        got = {r["doc_id"] for r in
+               _candidates(spark, pos_index, must, nots, anys).collect()}
+        assert got == reference(must, nots, anys), (must, nots, anys)
+    assert not reference([t["t1"]], [t["t1"]], [])
+    assert reference([t["t1"], t["t2"]] * 35, [t["t9"]], [])
 
-    # past the 60-bit mask budget the fused path declines and
-    # search_boolean takes the unfused fallback — same results either way
-    assert _fused_candidates(spark, pos_index, list(range(61)), [], []) is None
+
+def test_candidate_plan_has_one_exchange(spark, vocab, pos_index):
+    """`+t1 +t2 -t9` plans as one partial/final aggregate around ONE
+    doc_id exchange over a partition-pruned scan. A countDistinct form
+    would add an Expand and a second exchange."""
+    from pears_fruit_fly_spark.operators.phrase import _candidates
+
+    t = vocab.term_to_id
+    df = _candidates(spark, pos_index, [t["t1"], t["t2"]], [t["t9"]], [])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning(doc_id") == 1, plan
+    assert "Expand" not in plan, plan
+    assert "term_bucket" in plan.split("PartitionFilters:")[1][:160]
+
+
+_WORDS = [f"t{i}" for i in range(10)] + ["zzz"]  # zzz: out of vocabulary
+
+
+@settings(max_examples=20, derandomize=True, deadline=None)
+@given(
+    must=st.lists(st.sampled_from(_WORDS), max_size=3),
+    should=st.lists(st.sampled_from(_WORDS), max_size=3),
+    must_not=st.lists(st.sampled_from(_WORDS), max_size=3),
+    phrase=st.one_of(st.none(), st.lists(st.sampled_from(_WORDS),
+                                         min_size=2, max_size=3)),
+)
+def test_boolean_search_differential(spark, vocab, pos_index, must, should,
+                                     must_not, phrase):
+    """search_boolean's doc set (k above the corpus size) equals a set
+    reference over the raw token lists for overlapping, duplicate and OOV
+    clauses with an optional phrase."""
+    t2i = vocab.term_to_id
+    terms = _doc_terms(vocab)
+    query = " ".join(["+" + w for w in must] + ["-" + w for w in must_not]
+                     + should
+                     + ([f'"{" ".join(phrase)}"'] if phrase else []))
+    got = {r["doc_id"] for r in
+           search_boolean(spark, pos_index, query, vocab, k=100).collect()}
+
+    need = {t2i.get(w, -1) for w in must}
+    banned = {t2i[w] for w in must_not if w in t2i}
+    scoring = {t2i[w] for w in must + should if w in t2i}
+    if phrase is None:
+        in_phrase = set(terms)
+    elif all(w in t2i for w in phrase):
+        in_phrase = set(_oracle_matches(" ".join(phrase)))
+    else:
+        in_phrase = set()
+    want = {
+        d for d, held in terms.items()
+        if need <= held and d in in_phrase and not banned & held
+        and (scoring & held if must + should else phrase is not None)
+    }
+    assert got == want, query
