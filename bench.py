@@ -138,33 +138,12 @@ def main() -> None:
     timings["bm25_wand_p95"] = lat[int(0.95 * (len(lat) - 1))]
     extras["bm25_wand_p50"] = round(lat[len(lat) // 2], 4)
 
-    # serving fast path: pruned blocks collected, same kernel on the driver
-    lat_fp = []
-    for qid in range(0, 40, 2):
-        qtext = qset.iloc[qid].query_text
-        t0 = time.time()
-        bm25_topk_wand(spark, index_dir, qtext, vocab, k=10,
-                       driver_fast_path_max_df=1 << 30).collect()
-        lat_fp.append(time.time() - t0)
-    lat_fp.sort()
-    extras["bm25_wand_fastpath_p50"] = round(lat_fp[len(lat_fp) // 2], 4)
-    extras["bm25_wand_fastpath_p95"] = round(
-        lat_fp[int(0.95 * (len(lat_fp) - 1))], 4
-    )
-
-    # theta-probe accountability (VERDICT r2 #9): decoded-block counts at
-    # large k with and without the seeded threshold (rank identity tested)
-    inst_off: dict = {}
-    inst_on: dict = {}
+    # decoded-block accountability at large k (VERDICT r2 #9)
+    inst: dict = {}
     qtext = qset.iloc[3].query_text
     bm25_topk_wand(spark, index_dir, qtext, vocab, k=100, n_ranges=CPUS,
-                   theta_probe=False, instrument=inst_off).collect()
-    bm25_topk_wand(spark, index_dir, qtext, vocab, k=100, n_ranges=CPUS,
-                   theta_probe=True, instrument=inst_on).collect()
-    extras["wand_k100_decoded_blocks"] = int(inst_off["decoded_blocks"].value)
-    extras["wand_k100_decoded_blocks_seeded"] = int(
-        inst_on["decoded_blocks"].value
-    )
+                   instrument=inst).collect()
+    extras["wand_k100_decoded_blocks"] = int(inst["decoded_blocks"].value)
 
     # batch serving: 40 queries in one scatter job
     from pears_fruit_fly_spark.operators.bm25 import bm25_topk_wand_batch

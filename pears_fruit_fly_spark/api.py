@@ -310,17 +310,21 @@ class SearchEngine:
         mode: str = "bm25",
         prefilter_k: int = 1000,
         n_ranges: int | None = None,
-        fast_path_max_df: int | None = 200_000,
     ) -> DataFrame:
         """Top-k search. Returns (url, doc_id, score|hamming)."""
+        if mode not in ("bm25", "hamming", "hybrid"):
+            raise ValueError(f"unknown mode {mode!r}")
         query_text = self._encode_query(query_text)
         docmap = self.spark.read.parquet(self.docmap_path)
-        if mode == "hamming":
+        candidate_df = None
+        if mode != "bm25":
             from pears_fruit_fly_spark.operators.postings import (
                 read_tombstones_df,
             )
 
-            sigs = self.spark.read.parquet(self.sig_path)
+            # both Hamming modes rank LIVE signatures only, so deleted docs
+            # take no prefilter slot between a delete and a merge
+            sigs = self.spark.read.parquet(self.sig_path).select("url", "sig")
             tomb_df = read_tombstones_df(self.spark, self.index_dir)
             if tomb_df is not None:
                 # DF anti-join, never a driver id list: scales to any
@@ -330,33 +334,20 @@ class SearchEngine:
             qsig = featurize_query(
                 query_text, self.vocab, self.fly_cfg, self.projection
             )
-            top = hamming_topk(sigs.select("url", "sig"), qsig, k)
-            return top.join(docmap, "url").select("url", "doc_id", "hamming")
+            top = hamming_topk(
+                sigs, qsig, k if mode == "hamming" else prefilter_k
+            ).join(docmap, "url")
+            if mode == "hamming":
+                return top.select("url", "doc_id", "hamming")
+            # hybrid: prefilter candidates stay a DataFrame all the way into
+            # the WAND scatter (cogrouped per doc range) — no driver
+            # collect, so prefilter_k can be 10^5+ at scale (VERDICT r2 #7)
+            candidate_df = top.select("doc_id")
 
-        candidate_df = None
-        if mode == "hybrid":
-            # prefilter candidates stay a DataFrame all the way into the
-            # WAND scatter (cogrouped per doc range) — no driver collect, so
-            # prefilter_k can be 10^5+ at scale (VERDICT r2 #7)
-            sigs = self.spark.read.parquet(self.sig_path)
-            qsig = featurize_query(
-                query_text, self.vocab, self.fly_cfg, self.projection
-            )
-            candidate_df = (
-                hamming_topk(sigs.select("url", "sig"), qsig, prefilter_k)
-                .join(docmap, "url")
-                .select("doc_id")
-            )
-        elif mode != "bm25":
-            raise ValueError(f"unknown mode {mode!r}")
-
-        # serving default: small queries (summed df <= fast_path_max_df)
-        # skip the scatter — one collect of the pruned compressed blocks,
-        # same WAND kernel on the driver, rank-identical (tested)
+        # one distributed WAND scatter; hybrid cogroups its candidates in
         top = bm25_topk_wand(
             self.spark, self.index_dir, query_text, self.vocab, k=k,
             n_ranges=n_ranges, candidate_df=candidate_df,
-            driver_fast_path_max_df=fast_path_max_df,
         )
         return (
             top.join(docmap, "doc_id")

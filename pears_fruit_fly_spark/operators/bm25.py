@@ -11,11 +11,12 @@ Two implementations, deliberately:
   hash agg + TakeOrderedAndProject: the cross-checkable reference path
   (DuckDB oracle SQL in __spark_entry__.py matches it 1:1).
 
-* ``bm25_topk_wand`` — the serving path over the compressed index:
-  partition-pruned scan of query-term buckets → doc-range scatter of
-  ENCODED blocks → per-range exact block-max WAND (segment-at-a-time,
-  vectorized decode, threshold pruning skips whole blocks) → k-row gather.
-  The only shuffle moves compressed block bytes of the query's terms.
+* ``bm25_topk_wand`` — the serving path over the compressed index, one
+  query shape: partition-pruned scan of query-term buckets → doc-range
+  scatter of ENCODED blocks → per-range exact block-max WAND
+  (segment-at-a-time, vectorized decode, threshold pruning skips whole
+  blocks) → k-row gather. The only shuffle moves compressed block bytes of
+  the query's terms; building the plan submits no Spark job.
 
 Distributed-WAND note: postings are term-partitioned (build locality), but
 doc-aligned scoring needs all query terms per doc in one task, so the query
@@ -338,7 +339,7 @@ class _Run:
                  "stats")
 
     def __init__(self, blocks: list, weight: float, lo: int, hi: int,
-                 stats: dict | None = None):
+                 stats: dict):
         # blocks sorted by first_doc; weight = qtf * idf
         self.blocks = blocks
         self.i = 0
@@ -346,7 +347,7 @@ class _Run:
         self.buf_ids: np.ndarray | None = None
         self.buf_scores: np.ndarray | None = None
         self.lo, self.hi = lo, hi  # range mask for straddling blocks
-        self.stats = stats  # optional {"decoded": n} instrumentation
+        self.stats = stats  # {"decoded": n} instrumentation
 
     def active(self) -> bool:
         return self.buf_ids is not None or self.i < len(self.blocks)
@@ -367,8 +368,7 @@ class _Run:
         return self.weight * float(self.blocks[self.i]["max_impact"])
 
     def _decode_current(self, avgdl: float, k1: float, b: float) -> None:
-        if self.stats is not None:
-            self.stats["decoded"] = self.stats.get("decoded", 0) + 1
+        self.stats["decoded"] = self.stats.get("decoded", 0) + 1
         blk = self.blocks[self.i]
         n = int(blk["n"])
         ids = delta_decode(
@@ -432,7 +432,6 @@ def _wand_score_range(
     b: float,
     candidates: np.ndarray | None = None,
     excluded: np.ndarray | None = None,
-    theta0: float = -1.0,
 ) -> list[tuple[int, float]]:
     """Exact top-k within one doc range via segment-at-a-time block-max WAND.
 
@@ -445,20 +444,14 @@ def _wand_score_range(
     vectorized lexsort per segment (score desc, doc_id asc) — no per-posting
     Python heap loop (VERDICT r1 #8). candidates, when given, is a SORTED
     int64 array (the fruit-fly prefilter set) applied with np.isin.
-
-    theta0 seeds the pruning threshold (VERDICT r2 #9): any LOWER bound on
-    the global k-th best score is admissible — docs scoring < theta0 cannot
-    reach the global top-k, and score == theta0 is retained (>=/strict-<
-    discipline), so tie-breaks survive. With the default -1 no seed applies
-    (scores are non-negative).
     """
     top_d = np.empty(0, dtype=np.int64)
     top_s = np.empty(0, dtype=np.float64)
-    theta = theta0  # k-th best once full; seeded lower bound before that
+    theta = -1.0  # k-th best score once the top-k is full
 
     def push(ids: np.ndarray, scores: np.ndarray) -> None:
         nonlocal top_d, top_s, theta
-        if top_s.size == k or theta > -1.0:
+        if top_s.size == k:
             # vectorized pre-prune: equal-score items can still win on
             # doc_id ties, so keep >= theta
             m = scores >= theta
@@ -470,7 +463,7 @@ def _wand_score_range(
         order = np.lexsort((cat_d, -cat_s))[:k]
         top_d, top_s = cat_d[order], cat_s[order]
         if top_s.size == k:
-            theta = max(theta, top_s[-1])
+            theta = top_s[-1]
 
     while True:
         active = [r for r in runs if r.active()]
@@ -478,7 +471,7 @@ def _wand_score_range(
             break
         e = min(r.cur_last() for r in active)
         ub = sum(r.cur_ub() for r in active if r.cur_first() <= e)
-        if (top_s.size == k or theta > -1.0) and ub < theta:
+        if top_s.size == k and ub < theta:
             for r in active:
                 r.skip_blocks_ending_by(e)
             continue
@@ -526,50 +519,31 @@ def bm25_topk_wand(
     vocab: Vocab,
     k: int = 10,
     n_ranges: int | None = None,
-    candidate_docs: set[int] | None = None,
     candidate_df: DataFrame | None = None,
-    driver_fast_path_max_df: int | None = None,
-    theta_probe: bool | None = None,
-    theta_probe_max_bytes: int = 8 << 20,
     instrument: dict | None = None,
 ) -> DataFrame:
     """Top-k BM25 over the compressed index. Returns (doc_id, score).
 
-    theta_probe (VERDICT r2 #9): before the scatter, ONE doc range (the one
-    with the highest block-max impact) is scored on the driver and its k-th
-    score — a guaranteed lower bound on the global k-th — seeds every other
-    range's pruning threshold, cutting decoded blocks. Costs two extra
-    driver jobs, so the None default enables it only when that pays: large
-    k (>= 50), where per-range heaps fill slowly and unseeded ranges decode
-    many blocks. Applied only on the plain distributed path (no candidates,
-    driver-size tombstones); rank-identical by construction and by test.
-    theta_probe_max_bytes caps the probe's driver pull: if the chosen
-    range's compressed payload exceeds it (pathological head-term ranges),
-    seeding is skipped and the scatter runs unseeded — still
-    rank-identical (VERDICT r3 #6).
-    instrument, when given, receives a 'decoded_blocks' accumulator whose
-    value after materialization counts block decodes.
+    One query shape: the pruned blocks scatter to n_ranges doc ranges, each
+    range runs the exact block-max WAND kernel, and the per-range top-k
+    lists are gathered. Without aux input that is one
+    groupBy(range_id).applyInPandas. Two aux inputs are instead COGROUPED
+    per range, so each range task sees only its own slice and nothing is
+    materialized on the driver (VERDICT r2 #3/#7):
+      * tombstones, once the delete set exceeds the driver cap (smaller
+        sets ride as a broadcast sorted array);
+      * candidate_df, the hybrid prefilter (fruit-fly Hamming candidates)
+        as a doc_id DataFrame — only those docs are scored, and
+        prefilter_k can be 10^5+ without a driver hop.
+    The return is lazy: with a warm open_index (and a driver-sized
+    vocabulary, so the term lookup is in memory) building it submits no
+    Spark job.
 
-    candidate_docs: optional prefilter set (fruit-fly Hamming candidates);
-    when given, only those docs are scored (semantics of the PeARS
-    signature prefilter composition — SURVEY.md §3.3 stage B').
-    candidate_df: the same prefilter as a doc_id DataFrame — the scale form
-    (VERDICT r2 #7): candidates are never collected to the driver; they are
-    range-partitioned and cogrouped into the scatter, so prefilter_k can be
-    10^5+ without a driver hop. Rank-identical to the set form (tested).
     n_ranges=None (default) derives the scatter width from n_docs so the
     per-range decode working set stays bounded at any corpus size
     (VERDICT r1 W6 design note); pass an int to pin it.
-
-    driver_fast_path_max_df: when the query terms' summed df is at most
-    this, skip the scatter entirely — ONE collect job pulls the pruned
-    compressed blocks (the exact rows the shuffle would move, a few MB for
-    ordinary queries) and the SAME WAND kernel runs on the driver. This is
-    the low-latency serving shape (a serving node fetching posting blocks
-    by bucket from object storage); rank-identical by construction. None
-    (default) = always distributed — the scale path and the one the
-    correctness harness exercises. Disabled automatically when the
-    tombstone set exceeds the driver cap or candidates come as a DataFrame.
+    instrument, when given, receives a 'decoded_blocks' accumulator whose
+    value after materialization counts block decodes.
     """
     info, postings, _, _, tombstones, tomb_count, tomb_df = (
         open_index(spark, index_dir)
@@ -588,10 +562,9 @@ def bm25_topk_wand(
 
     term_ids = sorted(qcounts)
     found = lookup_terms(spark, index_dir, term_ids)
-    stats = {t: df_ for t, (df_, _) in found.items()}
     buckets = sorted({bk for _, bk in found.values()})
     weights = {
-        t: qcounts[t] * idf(n_docs, stats.get(t, 0)) for t in term_ids if t in stats
+        t: qcounts[t] * idf(n_docs, found[t][0]) for t in term_ids if t in found
     }
     if not weights:
         return spark.createDataFrame([], SCORE_SCHEMA)
@@ -602,37 +575,6 @@ def bm25_topk_wand(
     if "positions" in blocks.columns:
         # BM25 never reads positions — keep them out of the scatter shuffle
         blocks = blocks.drop("positions")
-
-    if (
-        driver_fast_path_max_df is not None
-        and not tomb_distributed
-        and candidate_df is None
-        and sum(stats.get(t, 0) for t in weights) <= driver_fast_path_max_df
-    ):
-        cand_arr = (
-            np.unique(np.fromiter(candidate_docs, dtype=np.int64))
-            if candidate_docs is not None
-            else None
-        )
-        rows = blocks.collect()
-        runs: list[_Run] = []
-        by_key: dict[tuple[int, int], list] = {}
-        for r in rows:
-            by_key.setdefault((int(r["term_id"]), int(r["salt"])), []).append(r)
-        lo, hi = 0, (1 << 62)
-        fp_stats: dict = {}
-        for (t, _s), grp in sorted(by_key.items()):
-            grp.sort(key=lambda r: int(r["first_doc"]))
-            runs.append(_Run(grp, weights[t], lo, hi, stats=fp_stats))
-        top = _wand_score_range(runs, k, avgdl, k1, b,
-                                candidates=cand_arr, excluded=tombstones)
-        if instrument is not None:
-            acc = spark.sparkContext.accumulator(0)
-            acc.add(int(fp_stats.get("decoded", 0)))
-            instrument["decoded_blocks"] = acc
-        return spark.createDataFrame(top or [], SCORE_SCHEMA).orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
 
     # scatter blocks to doc ranges (straddlers duplicated, masked after
     # decode); width from the doc-ID SPAN, not the count — appended
@@ -650,101 +592,48 @@ def bm25_topk_wand(
     )
 
     b_weights = spark.sparkContext.broadcast(weights)
-    cand_arr = (
-        np.unique(np.fromiter(candidate_docs, dtype=np.int64))
-        if candidate_docs is not None
-        else None
-    )
-    b_cand = spark.sparkContext.broadcast(cand_arr)
     b_excl = spark.sparkContext.broadcast(tombstones)
-    cand_via_df = candidate_df is not None
     decoded_acc = spark.sparkContext.accumulator(0)
     if instrument is not None:
         instrument["decoded_blocks"] = decoded_acc
 
-    def _make_runs(pdf: pd.DataFrame, lo: int, hi: int,
-                   stats: dict | None = None) -> list[_Run]:
-        w = b_weights.value
-        runs = []
-        for (t, s), grp in pdf.groupby(["term_id", "salt"], sort=True):
-            grp = grp.sort_values("first_doc")
-            runs.append(_Run(grp.to_dict("records"), w[int(t)], lo, hi,
-                             stats=stats))
-        return runs
-
-    # theta probe: score ONE modest range on the driver; its exact k-th
-    # score lower-bounds the global k-th and seeds every other range
-    theta0 = -1.0
-    probe_rows: list[tuple[int, float]] = []
-    probe_rid = None
-    if theta_probe is None:
-        theta_probe = k >= 50  # auto: seed only where the probe jobs pay
-    if (
-        theta_probe
-        and cand_arr is None
-        and not cand_via_df
-        and not tomb_distributed
-    ):
-        meta = blocks.groupBy("range_id").agg(
-            F.sum("n").alias("rows"), F.max("max_impact").alias("mi"),
-            F.sum(
-                F.length("doc_gaps") + F.length("tfs") + F.length("dls")
-            ).alias("bytes"),
-        ).collect()
-        if meta:
-            # probe where the top scores most plausibly live: the range with
-            # the highest block-max impact (ties -> fewer rows); its k-th
-            # score is then a TIGHT global lower bound. Require enough rows
-            # to plausibly fill the heap, else fall back to the largest.
-            eligible = [r for r in meta if int(r["rows"]) >= 20 * k]
-            pick = (
-                max(eligible, key=lambda r: (float(r["mi"]), -int(r["rows"])))
-                if eligible
-                else max(meta, key=lambda r: int(r["rows"]))
-            )
-            # byte-bound the driver pull (VERDICT r3 #6): the probe is a
-            # toPandas of ONE range's compressed blocks — cheap for real
-            # queries, but a pathological range (huge postings for every
-            # query term) could drag tens of MB through the driver for a
-            # seeding-only optimization. Over budget -> skip seeding; the
-            # scatter runs unseeded, rank-identical by construction.
-            if int(pick["bytes"] or 0) <= theta_probe_max_bytes:
-                probe_rid = int(pick["range_id"])
-                lo = probe_rid * range_width
-                hi = (probe_rid + 1) * range_width - 1
-                pstats: dict = {}
-                ppdf = blocks.filter(F.col("range_id") == probe_rid).toPandas()
-                probe_rows = _wand_score_range(
-                    _make_runs(ppdf, lo, hi, stats=pstats), k, avgdl, k1, b,
-                    excluded=tombstones,
-                )
-                decoded_acc.add(int(pstats.get("decoded", 0)))
-                if len(probe_rows) == k:
-                    theta0 = probe_rows[-1][1]
-                blocks = blocks.filter(F.col("range_id") != probe_rid)
-
-    def _score_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _score_range(rid: int, pdf: pd.DataFrame, candidates, excluded
+                     ) -> pd.DataFrame:
         if pdf.empty:
             return pd.DataFrame({"doc_id": [], "score": []})
-        rid = int(pdf["range_id"].iloc[0])
         lo, hi = rid * range_width, (rid + 1) * range_width - 1
+        w = b_weights.value
         stats: dict = {}
-        top = _wand_score_range(_make_runs(pdf, lo, hi, stats=stats),
-                                k, avgdl, k1, b,
-                                candidates=b_cand.value,
-                                excluded=b_excl.value, theta0=theta0)
+        runs = [
+            _Run(grp.sort_values("first_doc").to_dict("records"), w[int(t)],
+                 lo, hi, stats)
+            for (t, _s), grp in pdf.groupby(["term_id", "salt"], sort=True)
+        ]
+        top = _wand_score_range(runs, k, avgdl, k1, b,
+                                candidates=candidates, excluded=excluded)
         decoded_acc.add(int(stats.get("decoded", 0)))
         return pd.DataFrame(top, columns=["doc_id", "score"])
 
-    if tomb_distributed or cand_via_df:
-        # Scale path: per-range tombstone slices and/or prefilter candidates
-        # are COGROUPED with the blocks — each range task sees exactly its
-        # own slice, nothing is materialized on the driver (VERDICT r2 #3/#7);
-        # the tombstone table rides pinned in the opened-index cache
+    # explicit numbered repartition on every scatter side: a plain groupBy
+    # exchange here is AQE-coalescible, and a query's few MB of compressed
+    # blocks coalesce to ONE partition — serializing every range's Python
+    # WAND kernel into a single task (r6; measured 2-3x on query latency).
+    # REPARTITION_BY_NUM shuffles are exempt from coalescing, and n_ranges
+    # already scales with n_docs (_auto_ranges), so this stays right at any
+    # corpus size. The group functions below carry no type hints: Spark
+    # would try to infer the UDF kind from partial hints and warn.
+    by_range = blocks.repartition(n_ranges, "range_id").groupBy("range_id")
+    if not tomb_distributed and candidate_df is None:
+
+        def _score_group(key, pdf):
+            return _score_range(int(key[0]), pdf, None, b_excl.value)
+
+        local_topk = by_range.applyInPandas(_score_group, SCORE_SCHEMA)
+    else:
         aux_parts = []
-        if tomb_distributed:
+        if tomb_distributed:  # table pinned in the opened-index cache
             aux_parts.append(tomb_df.withColumn("is_cand", F.lit(False)))
-        if cand_via_df:
+        if candidate_df is not None:
             aux_parts.append(
                 candidate_df.select(
                     F.col(candidate_df.columns[0]).cast("long").alias("doc_id")
@@ -756,54 +645,23 @@ def bm25_topk_wand(
         aux = aux.withColumn(
             "range_id", (F.col("doc_id") / F.lit(range_width)).cast("long")
         )
+        cand_via_df = candidate_df is not None  # keep the DF out of the UDF closure
 
-        def _score_cogroup(key, pdf: pd.DataFrame, aux_pdf: pd.DataFrame
-                           ) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            rid = int(key[0])
-            lo, hi = rid * range_width, (rid + 1) * range_width - 1
-            excl = b_excl.value
-            cand = b_cand.value
+        def _score_cogroup(key, pdf, aux_pdf):
+            ids = np.empty(0, dtype=np.int64)
+            is_c = np.empty(0, dtype=bool)
             if not aux_pdf.empty:
                 ids = aux_pdf["doc_id"].to_numpy(dtype=np.int64)
                 is_c = aux_pdf["is_cand"].to_numpy(dtype=bool)
-                if tomb_distributed:
-                    excl = np.unique(ids[~is_c])
-                if cand_via_df:
-                    cand = np.unique(ids[is_c])
-            elif cand_via_df:
-                cand = np.empty(0, dtype=np.int64)  # no candidates here
-            top = _wand_score_range(_make_runs(pdf, lo, hi), k, avgdl, k1, b,
-                                    candidates=cand, excluded=excl)
-            return pd.DataFrame(top, columns=["doc_id", "score"])
+            return _score_range(
+                int(key[0]), pdf,
+                np.unique(ids[is_c]) if cand_via_df else None,
+                np.unique(ids[~is_c]) if tomb_distributed else b_excl.value,
+            )
 
-        # explicit numbered repartition on BOTH cogroup sides: a plain
-        # groupBy exchange here is AQE-coalescible, and a query's few MB
-        # of compressed blocks coalesce to ONE partition — serializing
-        # every range's Python WAND kernel into a single task (r6;
-        # measured 2-3x on query latency). REPARTITION_BY_NUM shuffles
-        # are exempt from coalescing, and n_ranges already scales with
-        # n_docs (_auto_ranges), so this stays right at any corpus size.
-        local_topk = (
-            blocks.repartition(n_ranges, "range_id").groupBy("range_id")
-            .cogroup(
-                aux.repartition(n_ranges, "range_id").groupBy("range_id")
-            )
-            .applyInPandas(_score_cogroup, SCORE_SCHEMA)
-        )
-    else:
-        local_topk = (
-            blocks.repartition(n_ranges, "range_id")  # see cogroup note
-            .groupBy("range_id")
-            .applyInPandas(_score_group, SCORE_SCHEMA)
-        )
-    if probe_rows:
-        local_topk = local_topk.unionByName(
-            spark.createDataFrame(
-                [(int(d), float(s)) for d, s in probe_rows], SCORE_SCHEMA
-            )
-        )
+        local_topk = by_range.cogroup(
+            aux.repartition(n_ranges, "range_id").groupBy("range_id")
+        ).applyInPandas(_score_cogroup, SCORE_SCHEMA)
     return local_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 

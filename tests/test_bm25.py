@@ -110,11 +110,50 @@ def test_wand_prefilter_composition(spark, corpus, vocab):
         (r["doc_id"], r["score"])
         for r in bm25_topk_wand(
             spark, corpus["dir"], row.query_text, vocab, k=10, n_ranges=4,
-            candidate_docs=cand,
+            candidate_df=spark.createDataFrame(
+                [(d,) for d in sorted(cand)], "doc_id long"),
         ).collect()
     ]
     want = [(d, s) for d, s in full if d in cand][:10]
     _assert_rank_identical(got, want, "prefilter")
+
+
+def test_wand_candidate_df_reports_decoded_blocks(spark, corpus, vocab):
+    """The cogrouped (candidate_df) scatter feeds the same decoded-block
+    accumulator as the plain scatter."""
+    row = QUERIES.iloc[3]
+    cand = spark.createDataFrame(
+        [(d,) for d, _ in corpus["oracle"].topk(row.query_text, 50)],
+        "doc_id long",
+    )
+    inst: dict = {}
+    assert bm25_topk_wand(
+        spark, corpus["dir"], row.query_text, vocab, k=10, n_ranges=4,
+        candidate_df=cand, instrument=inst,
+    ).count() == 10
+    assert inst["decoded_blocks"].value > 0
+
+
+def test_wand_builds_lazily(spark, corpus, vocab):
+    """With a warm open_index, building the WAND query submits no Spark job
+    at any k; only the action does."""
+    from pears_fruit_fly_spark.operators.bm25 import open_index
+
+    open_index(spark, corpus["dir"])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    row = QUERIES.iloc[3]
+    try:
+        for k in (10, 100):
+            group = f"wand-lazy-k{k}"
+            sc.setJobGroup(group, "laziness guard")
+            top = bm25_topk_wand(spark, corpus["dir"], row.query_text, vocab,
+                                 k=k, n_ranges=4)
+            assert list(tracker.getJobIdsForGroup(group)) == [], k
+            top.collect()
+            assert list(tracker.getJobIdsForGroup(group)), k
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_relational_bm25_property_random_corpora(spark, vocab):
@@ -285,120 +324,6 @@ def test_wand_auto_ranges(spark, corpus, vocab):
         ).collect()
     ]
     _assert_rank_identical(got, want, "auto_ranges")
-
-
-def test_driver_fast_path_rank_identity(spark, corpus, vocab):
-    """The small-query driver fast path (one collect of the pruned blocks,
-    same kernel locally) must be rank-identical to the distributed scatter
-    — incl. with a candidate prefilter and on OOV-only queries."""
-    for qid in (0, 17, 63, 96):
-        row = QUERIES.iloc[qid]
-        want = corpus["oracle"].topk(row.query_text, int(row.k))
-        got = [
-            (r["doc_id"], r["score"])
-            for r in bm25_topk_wand(
-                spark, corpus["dir"], row.query_text, vocab, k=int(row.k),
-                driver_fast_path_max_df=1 << 30,
-            ).collect()
-        ]
-        _assert_rank_identical(got, want, f"fast{qid}")
-    # prefilter composition through the fast path
-    row = QUERIES.iloc[3]
-    full = corpus["oracle"].topk(row.query_text, 50)
-    cand = {d for d, _ in full[::2]}
-    got = [
-        (r["doc_id"], r["score"])
-        for r in bm25_topk_wand(
-            spark, corpus["dir"], row.query_text, vocab, k=10,
-            candidate_docs=cand, driver_fast_path_max_df=1 << 30,
-        ).collect()
-    ]
-    _assert_rank_identical(got, [(d, s) for d, s in full if d in cand][:10],
-                           "fastpre")
-    assert (
-        bm25_topk_wand(spark, corpus["dir"], "zz_oov", vocab, k=5,
-                       driver_fast_path_max_df=1 << 30).count() == 0
-    )
-
-
-def test_theta_probe_seeding_rank_identity_and_fewer_decodes(spark, vocab,
-                                                             tmp_path):
-    """VERDICT r2 #9: seeding per-range theta from a probed range must keep
-    rank identity while decoding fewer (never more) blocks."""
-    from pears_fruit_fly_spark.config import PostingsConfig
-    from pears_fruit_fly_spark.operators.bm25 import bm25_topk_wand
-    from pears_fruit_fly_spark.operators.postings import build_postings
-
-    # heterogeneous lengths: ids < 300 are short (high BM25 impact for
-    # t1/t2) and cluster in doc-range 0 — the probe range (fewest posting
-    # rows). Its k-th score then exceeds the long docs' block-max bounds,
-    # so seeded ranges skip whole blocks without decoding.
-    docs = [(i, "t1 t2" if i < 300 else "t1 t2 " + "t3 " * 20)
-            for i in range(2000)]
-    d = str(tmp_path / "seedidx")
-    build_postings(
-        spark, spark.createDataFrame(docs, "doc_id long, text string"),
-        vocab, d,
-        cfg=PostingsConfig(num_partitions=4, block_size=64),
-    )
-    reductions = []
-    for q in ("t1 t2", "t2", "t1 t3"):
-        inst_off: dict = {}
-        off = [(r["doc_id"], r["score"]) for r in bm25_topk_wand(
-            spark, d, q, vocab, k=5, n_ranges=6, theta_probe=False,
-            instrument=inst_off).collect()]
-        n_off = inst_off["decoded_blocks"].value
-        inst_on: dict = {}
-        on = [(r["doc_id"], r["score"]) for r in bm25_topk_wand(
-            spark, d, q, vocab, k=5, n_ranges=6, theta_probe=True,
-            instrument=inst_on).collect()]
-        n_on = inst_on["decoded_blocks"].value
-        assert on == off, q
-        assert 0 < n_on <= n_off, (q, n_on, n_off)
-        reductions.append(n_off - n_on)
-    # the short-doc queries must show a REAL decode reduction
-    assert max(reductions) > 0, reductions
-
-
-def test_theta_probe_byte_budget_fallback(spark, vocab, tmp_path):
-    """VERDICT r3 #6: when the probe range's compressed payload exceeds
-    theta_probe_max_bytes, seeding is skipped (no driver pull) and the
-    unseeded scatter still returns the identical ranking; with a normal
-    budget on the same heterogeneous corpus the seeded run decodes fewer
-    blocks (the budget does not defeat the optimization)."""
-    from pears_fruit_fly_spark.config import PostingsConfig
-    from pears_fruit_fly_spark.operators.bm25 import bm25_topk_wand
-    from pears_fruit_fly_spark.operators.postings import build_postings
-
-    docs = [(i, "t1 t2" if i < 300 else "t1 t2 " + "t3 " * 20)
-            for i in range(2000)]
-    d = str(tmp_path / "budgetidx")
-    build_postings(
-        spark, spark.createDataFrame(docs, "doc_id long, text string"),
-        vocab, d,
-        cfg=PostingsConfig(num_partitions=4, block_size=64),
-    )
-    q = "t1 t2"
-    inst_off: dict = {}
-    off = [(r["doc_id"], r["score"]) for r in bm25_topk_wand(
-        spark, d, q, vocab, k=5, n_ranges=6, theta_probe=False,
-        instrument=inst_off).collect()]
-    # forced-tiny budget: every range's payload exceeds 1 byte -> the
-    # fallback path runs (decode count equals the fully unseeded run,
-    # which also proves no probe decodes happened on the driver)
-    inst_tiny: dict = {}
-    tiny = [(r["doc_id"], r["score"]) for r in bm25_topk_wand(
-        spark, d, q, vocab, k=5, n_ranges=6, theta_probe=True,
-        theta_probe_max_bytes=1, instrument=inst_tiny).collect()]
-    assert tiny == off
-    assert inst_tiny["decoded_blocks"].value == inst_off["decoded_blocks"].value
-    # generous budget: seeding proceeds and still cuts decodes
-    inst_on: dict = {}
-    on = [(r["doc_id"], r["score"]) for r in bm25_topk_wand(
-        spark, d, q, vocab, k=5, n_ranges=6, theta_probe=True,
-        theta_probe_max_bytes=8 << 20, instrument=inst_on).collect()]
-    assert on == off
-    assert inst_on["decoded_blocks"].value < inst_off["decoded_blocks"].value
 
 
 def test_wand_skewed_corpus_rank_identity(spark, vocab, tmp_path):

@@ -223,7 +223,6 @@ def test_large_delete_volume_distributed_mask(spark, vocab, tmp_path,
             (r["doc_id"], r["score"])
             for r in bm25_topk_wand(
                 spark, d, q, vocab, k=15, n_ranges=4,
-                driver_fast_path_max_df=10**9,  # must be auto-disabled
             ).collect()
         ]
         want = [(doc, s) for doc, s in oracle.topk(q, 15 + len(victims))
@@ -256,42 +255,82 @@ def test_delete_fraction_contract(spark, vocab, tmp_path):
     delete_docs(spark, d, range(16, 20))  # fresh overlay after purge
 
 
-def test_hybrid_candidate_df_rank_identity(spark, vocab, fly_cfg, pages_pdf,
-                                           tmp_path):
-    """The DataFrame-candidate hybrid path (no driver collect) must be
-    rank-identical to the legacy set-based prefilter."""
-    from pears_fruit_fly_spark.api import SearchEngine
+def _hybrid_reference(spark, eng, vocab, pages, q, prefilter_k, k,
+                      dead_urls=()):
+    """Expected hybrid top-k, independent of the WAND path: the NumPy BM25
+    oracle over every indexed doc (stats stay pre-delete until a merge),
+    restricted to the prefilter_k best Hamming docs among the LIVE urls."""
     from pears_fruit_fly_spark.operators.signatures import (
         featurize_query,
         hamming_topk,
     )
+    from pears_fruit_fly_spark.sources.wet import dedup_latest
+
+    docmap = spark.read.parquet(eng.docmap_path)
+    sigs = spark.read.parquet(eng.sig_path).select("url", "sig")
+    if dead_urls:
+        sigs = sigs.filter(~F.col("url").isin(list(dead_urls)))
+    qsig = featurize_query(q, vocab, eng.fly_cfg, eng.projection)
+    cand = {int(r["doc_id"]) for r in hamming_topk(sigs, qsig, prefilter_k)
+            .join(docmap, "url").select("doc_id").collect()}
+    rows = dedup_latest(pages).join(docmap, "url").select(
+        "url", "doc_id", "text").collect()
+    url_of = {r["doc_id"]: r["url"] for r in rows}
+    oracle = BM25Oracle([(r["doc_id"], r["text"]) for r in rows], vocab)
+    return [(url_of[d], d, s) for d, s in oracle.topk(q, oracle.n_docs)
+            if d in cand][:k]
+
+
+def _assert_same_ranking(got, want):
+    assert [(u, d) for u, d, _ in got] == [(u, d) for u, d, _ in want]
+    for (_, _, gs), (_, _, ws) in zip(got, want):
+        assert abs(gs - ws) < 1e-9
+
+
+def test_hybrid_candidate_df_rank_identity(spark, vocab, fly_cfg, pages_pdf,
+                                           tmp_path):
+    """The DataFrame-candidate hybrid path (no driver collect) must be
+    rank-identical to the NumPy oracle restricted to the Hamming top
+    prefilter_k."""
+    from pears_fruit_fly_spark.api import SearchEngine
 
     eng = SearchEngine(spark, str(tmp_path / "eng"), vocab, fly_cfg,
                        PostingsConfig(num_partitions=4))
-    eng.index(spark.createDataFrame(pages_pdf.iloc[:150]))
+    pages = spark.createDataFrame(pages_pdf.iloc[:150])
+    eng.index(pages)
     q = "t1 t3 t5"
-    got = [(r["url"], r["doc_id"], round(r["score"], 9))
-           for r in eng.search(q, k=10, mode="hybrid", prefilter_k=40,
-                               fast_path_max_df=None).collect()]
-    # legacy set-based path, assembled manually
-    docmap = spark.read.parquet(eng.docmap_path)
-    qsig = featurize_query(q, vocab, eng.fly_cfg, eng.projection)
-    cand = {
-        int(r["doc_id"])
-        for r in hamming_topk(
-            spark.read.parquet(eng.sig_path).select("url", "sig"), qsig, 40
-        ).join(docmap, "url").select("doc_id").collect()
-    }
-    want_df = bm25_topk_wand(spark, eng.index_dir, q, vocab, k=10,
-                             candidate_docs=cand)
-    want = [
-        (r["url"], r["doc_id"], round(r["score"], 9))
-        for r in want_df.join(docmap, "doc_id")
-        .select("url", "doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .collect()
-    ]
-    assert got == want and got
+    got = [(r["url"], r["doc_id"], r["score"])
+           for r in eng.search(q, k=10, mode="hybrid",
+                               prefilter_k=40).collect()]
+    want = _hybrid_reference(spark, eng, vocab, pages, q, 40, 10)
+    assert got
+    _assert_same_ranking(got, want)
+
+
+def test_hybrid_prefilter_skips_deleted_docs(spark, vocab, fly_cfg,
+                                             pages_pdf, tmp_path):
+    """Between a delete and a merge, tombstoned docs must not take hybrid
+    prefilter slots: the prefilter is the Hamming top prefilter_k among
+    LIVE docs, exactly as in the hamming mode."""
+    from pears_fruit_fly_spark.api import SearchEngine
+
+    eng = SearchEngine(spark, str(tmp_path / "eng"), vocab, fly_cfg,
+                       PostingsConfig(num_partitions=4))
+    pages = spark.createDataFrame(pages_pdf.iloc[:150])
+    eng.index(pages)
+    q = "t1 t3 t5"
+    top40 = [r["url"] for r in sorted(
+        eng.search(q, k=40, mode="hamming").collect(),
+        key=lambda r: (r["hamming"], r["url"]))]
+    dead = top40[::2]  # 20 of the 40 best Hamming docs
+    eng.delete(dead)
+    got = [(r["url"], r["doc_id"], r["score"])
+           for r in eng.search(q, k=10, mode="hybrid",
+                               prefilter_k=40).collect()]
+    want = _hybrid_reference(spark, eng, vocab, pages, q, 40, 10, dead)
+    assert len(want) == 10
+    assert not {u for u, _, _ in got} & set(dead)
+    _assert_same_ranking(got, want)
 
 
 def test_gc_grace_window(tmp_path):

@@ -211,8 +211,8 @@ def test_parse_query():
 def test_boolean_search_vs_bruteforce(spark, vocab, pos_index):
     """must/must_not filter; ranking = BM25 over must+should restricted to
     the filtered candidates — cross-checked against a brute-force doc scan
-    plus the already-tested WAND scorer's candidate_docs path."""
-    from pears_fruit_fly_spark.operators.bm25 import bm25_topk_wand
+    plus the NumPy BM25 oracle filtered to those candidates."""
+    from pears_fruit_fly_spark.oracle.bm25_numpy import BM25Oracle
 
     def docs_with(tok):
         return {d for d, txt in DOCS
@@ -222,9 +222,9 @@ def test_boolean_search_vs_bruteforce(spark, vocab, pos_index):
     got = [(r["doc_id"], round(r["score"], 6)) for r in search_boolean(
         spark, pos_index, "+t1 +t2 -t9 t6", vocab, k=10).collect()]
     assert {d for d, _ in got} <= want_cand
-    ref = [(r["doc_id"], round(r["score"], 6)) for r in bm25_topk_wand(
-        spark, pos_index, "t1 t2 t6", vocab, k=10,
-        candidate_docs=want_cand).collect()]
+    ref = [(d, round(s, 6))
+           for d, s in BM25Oracle(DOCS, vocab).topk("t1 t2 t6", len(DOCS))
+           if d in want_cand][:10]
     assert got == ref
 
 
