@@ -8,6 +8,8 @@ directory-rooted engine object.
     eng.search("some query", k=10, mode="hamming")   # fruit-fly NN (ref semantics)
     eng.search("some query", k=10, mode="hybrid")    # Hamming prefilter -> BM25
 
+Searches are lazy and return ranked rows: urls resolve in one k-row tail
+(docmap join + orderBy + limit = TakeOrderedAndProject, no global sort).
 Everything on disk: <dir>/signatures, <dir>/index/{postings,term_stats,
 _manifest,_build_info.json}, <dir>/docmap (url <-> doc_id).
 """
@@ -19,19 +21,30 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from pears_fruit_fly_spark.config import BM25Config, FlyConfig, PostingsConfig
 from pears_fruit_fly_spark.functions.fly import make_projection_matrix
 from pears_fruit_fly_spark.functions.vocab import Vocab
 from pears_fruit_fly_spark.operators.bm25 import bm25_topk_wand
-from pears_fruit_fly_spark.operators.docids import assign_doc_ids
-from pears_fruit_fly_spark.operators.postings import build_postings
+from pears_fruit_fly_spark.operators.docids import DOCMAP_SCHEMA, assign_doc_ids
+from pears_fruit_fly_spark.operators.postings import (
+    build_postings,
+    read_tombstones_df,
+)
 from pears_fruit_fly_spark.operators.signatures import (
+    SIGNATURE_SCHEMA,
     build_signatures,
     featurize_query,
     hamming_topk,
 )
 from pears_fruit_fly_spark.sources.wet import dedup_latest
+
+# signatures table: build_signatures rows + doc_id, partitioned by segment
+_SIG_TABLE_SCHEMA = StructType(
+    [*SIGNATURE_SCHEMA, StructField("doc_id", LongType()),
+     StructField("seg", StringType())]
+)
 
 
 class SearchEngine:
@@ -115,6 +128,12 @@ class SearchEngine:
 
         return cl.resolve(self.docmap_root)
 
+    def _docmap(self) -> DataFrame:
+        return self.spark.read.schema(DOCMAP_SCHEMA).parquet(self.docmap_path)
+
+    def _signatures(self) -> DataFrame:
+        return self.spark.read.schema(_SIG_TABLE_SCHEMA).parquet(self.sig_path)
+
     # -- build ------------------------------------------------------------
     def index(self, pages: DataFrame, text_col: str = "text") -> dict:
         """Full build: dedup-latest → doc ids → signatures → postings.
@@ -162,7 +181,7 @@ class SearchEngine:
                     "fresh engine_dir or the incremental pods path."
                 )
         ids.write.mode("overwrite").parquet(self.docmap_path)
-        docmap = self.spark.read.parquet(self.docmap_path)
+        docmap = self._docmap()
         pages_ids = clean.join(docmap, "url")
 
         sigs = build_signatures(
@@ -200,7 +219,7 @@ class SearchEngine:
         from pears_fruit_fly_spark.operators.postings import append_postings
 
         clean = self._piece_encode_pages(dedup_latest(pages), text_col)
-        docmap = self.spark.read.parquet(self.docmap_path)
+        docmap = self._docmap()
         new = clean.join(docmap.select("url"), "url", "left_anti")
         if new.isEmpty():
             return {}
@@ -253,7 +272,7 @@ class SearchEngine:
             udf = urls.select(F.col(urls.columns[0]).alias("url"))
         else:
             udf = self.spark.createDataFrame([(u,) for u in urls], "url string")
-        docmap = self.spark.read.parquet(self.docmap_path)
+        docmap = self._docmap()
         ids = docmap.join(F.broadcast(udf), "url", "left_semi").select("doc_id")
         return delete_docs(self.spark, self.index_dir, ids)
 
@@ -272,10 +291,7 @@ class SearchEngine:
         Deletes are applied via anti-joins against the tombstone table —
         nothing is materialized on the driver at any delete volume
         (VERDICT r2 #3)."""
-        from pears_fruit_fly_spark.operators.postings import (
-            merge_segments,
-            read_tombstones_df,
-        )
+        from pears_fruit_fly_spark.operators.postings import merge_segments
         from pears_fruit_fly_spark.plans import commitlog as cl
 
         # gate on the TRUE distributed count, exactly like merge_segments
@@ -284,12 +300,12 @@ class SearchEngine:
         # finding); merge is offline, one count job is fine
         tomb_df = read_tombstones_df(self.spark, self.index_dir)
         if tomb_df is not None and tomb_df.count() > 0:
-            docmap = self.spark.read.parquet(self.docmap_path)
+            docmap = self._docmap()
             deleted_urls = docmap.join(tomb_df, "doc_id", "left_semi").select("url")
 
             # sigs first: deleted_urls lazily reads the docmap files, so the
             # docmap commit must happen AFTER every plan that depends on it
-            sigs = self.spark.read.parquet(self.sig_path)
+            sigs = self._signatures()
             cl.commit_rewrite(
                 self.sig_root, "purge",
                 lambda p: sigs.join(deleted_urls, "url", "left_anti")
@@ -303,6 +319,14 @@ class SearchEngine:
         return merge_segments(self.spark, self.index_dir)
 
     # -- query ------------------------------------------------------------
+    def _with_urls(self, top: DataFrame, k: int, rank: str = "score") -> DataFrame:
+        """The k-row tail of every search: top (doc_id, score), or (url,
+        hamming) if rank="hamming", joins the docmap, then orderBy + limit."""
+        key = "doc_id" if rank == "score" else "url"
+        first = F.desc(rank) if rank == "score" else F.asc(rank)
+        return (top.join(self._docmap(), key).select("url", "doc_id", rank)
+                .orderBy(first, F.asc(key)).limit(k))
+
     def search(
         self,
         query_text: str,
@@ -311,49 +335,41 @@ class SearchEngine:
         prefilter_k: int = 1000,
         n_ranges: int | None = None,
     ) -> DataFrame:
-        """Top-k search. Returns (url, doc_id, score|hamming)."""
+        """Lazy top-k search → (url, doc_id, score|hamming), ranked by (score
+        desc, doc_id), or (hamming asc, url) in hamming mode."""
         if mode not in ("bm25", "hamming", "hybrid"):
             raise ValueError(f"unknown mode {mode!r}")
         query_text = self._encode_query(query_text)
-        docmap = self.spark.read.parquet(self.docmap_path)
         candidate_df = None
         if mode != "bm25":
-            from pears_fruit_fly_spark.operators.postings import (
-                read_tombstones_df,
-            )
-
             # both Hamming modes rank LIVE signatures only, so deleted docs
             # take no prefilter slot between a delete and a merge
-            sigs = self.spark.read.parquet(self.sig_path).select("url", "sig")
+            sigs = self._signatures().select("url", "sig")
             tomb_df = read_tombstones_df(self.spark, self.index_dir)
             if tomb_df is not None:
                 # DF anti-join, never a driver id list: scales to any
                 # delete volume (AQE broadcasts small sets, VERDICT r2 #3)
-                dead = docmap.join(tomb_df, "doc_id", "left_semi").select("url")
-                sigs = sigs.join(dead, "url", "left_anti")
+                dead = self._docmap().join(tomb_df, "doc_id", "left_semi")
+                sigs = sigs.join(dead.select("url"), "url", "left_anti")
             qsig = featurize_query(
                 query_text, self.vocab, self.fly_cfg, self.projection
             )
             top = hamming_topk(
                 sigs, qsig, k if mode == "hamming" else prefilter_k
-            ).join(docmap, "url")
+            )
             if mode == "hamming":
-                return top.select("url", "doc_id", "hamming")
+                return self._with_urls(top, k, rank="hamming")
             # hybrid: prefilter candidates stay a DataFrame all the way into
             # the WAND scatter (cogrouped per doc range) — no driver
             # collect, so prefilter_k can be 10^5+ at scale (VERDICT r2 #7)
-            candidate_df = top.select("doc_id")
+            candidate_df = top.join(self._docmap(), "url").select("doc_id")
 
         # one distributed WAND scatter; hybrid cogroups its candidates in
         top = bm25_topk_wand(
             self.spark, self.index_dir, query_text, self.vocab, k=k,
             n_ranges=n_ranges, candidate_df=candidate_df,
         )
-        return (
-            top.join(docmap, "doc_id")
-            .select("url", "doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-        )
+        return self._with_urls(top, k)
 
     def search_phrase(self, phrase_text: str, k: int = 10) -> DataFrame:
         """Exact-phrase top-k → (url, doc_id, score). Needs an index built
@@ -366,12 +382,7 @@ class SearchEngine:
             self.spark, self.index_dir, self._encode_query(phrase_text),
             self.vocab, k=k,
         )
-        docmap = self.spark.read.parquet(self.docmap_path)
-        return (
-            top.join(docmap, "doc_id")
-            .select("url", "doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-        )
+        return self._with_urls(top, k)
 
     def search_boolean(self, query: str | dict, k: int = 10) -> DataFrame:
         """Boolean query string ('+must -not \"a phrase\" should') or clause
@@ -407,9 +418,4 @@ class SearchEngine:
             ]
         top = search_boolean(self.spark, self.index_dir, clauses,
                              self.vocab, k=k)
-        docmap = self.spark.read.parquet(self.docmap_path)
-        return (
-            top.join(docmap, "doc_id")
-            .select("url", "doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-        )
+        return self._with_urls(top, k)

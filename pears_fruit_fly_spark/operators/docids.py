@@ -31,6 +31,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+# Schema of a docmap table (the assign_doc_ids output for key="url"). Readers
+# pass it explicitly, so opening a docmap runs no schema-inference job.
+DOCMAP_SCHEMA = "url string, doc_id long"
+
 
 def assign_doc_ids(
     df: DataFrame, key: str = "url", num_buckets: int | None = None

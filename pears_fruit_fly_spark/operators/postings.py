@@ -1673,6 +1673,8 @@ def merge_segments(spark: SparkSession, index_dir: str) -> dict:
 
 
 TOMBSTONES_DIRNAME = "_tombstones"
+# delete_docs writes this schema; readers pass it so no read infers one
+TOMBSTONE_SCHEMA = "doc_id long"
 
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
@@ -1694,7 +1696,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
         ids = [(int(d),) for d in doc_ids]
         if not ids:
             return 0
-        df = spark.createDataFrame(ids, "doc_id long")
+        df = spark.createDataFrame(ids, TOMBSTONE_SCHEMA)
     live = cl.resolve(index_dir)
     path = os.path.join(live, TOMBSTONES_DIRNAME)
     existing = read_tombstones_df(spark, index_dir)
@@ -1778,11 +1780,7 @@ def read_tombstones_df(spark: SparkSession, index_dir: str) -> DataFrame | None:
     path = os.path.join(cl.resolve(index_dir), TOMBSTONES_DIRNAME)
     if not fsio.isdir(path):
         return None
-    return (
-        spark.read.parquet(path)
-        .select(F.col("doc_id").cast("long").alias("doc_id"))
-        .distinct()
-    )
+    return spark.read.schema(TOMBSTONE_SCHEMA).parquet(path).distinct()
 
 
 def read_tombstones(spark: SparkSession, index_dir: str,
@@ -1806,7 +1804,7 @@ def read_tombstones(spark: SparkSession, index_dir: str,
             f"tombstone set exceeds the {max_driver}-id driver cap; use "
             "read_tombstones_df (distributed) or merge_segments to purge"
         )
-    rows = spark.read.parquet(path).distinct().collect()
+    rows = spark.read.schema(TOMBSTONE_SCHEMA).parquet(path).distinct().collect()
     if not rows:
         return None
     return np.unique(np.fromiter((r["doc_id"] for r in rows), dtype=np.int64))
