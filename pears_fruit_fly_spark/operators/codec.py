@@ -20,6 +20,11 @@ Layout per posting block (<= block_size docs of one term):
               delimiting: posting boundaries = cumulative tf value counts,
               so no extra offsets are stored.
     metadata: n, first_doc, last_doc, max_tf, max_impact (block-max for WAND)
+
+A block starts at each (term, salt) run start and after every block_size
+postings inside a run. encode_runs encodes every run of a bucket in one
+pass; it is the only encoder of the build, append and merge paths
+(encode_blocks is its one-run wrapper).
 """
 
 from __future__ import annotations
@@ -123,8 +128,7 @@ def encode_position_runs_concat(
     """(concatenated positions, per-run counts) → (ONE concatenated varbyte
     stream, per-run byte lengths), fully vectorized — no per-run Python
     objects. Varbyte values are value-local, so slicing the stream at
-    cumulative lengths is byte-identical to encoding each run separately
-    (encode_position_runs_flat is exactly that slicing wrapper)."""
+    cumulative lengths is byte-identical to encoding each run separately."""
     flat = np.asarray(flat, dtype=np.uint64)
     counts = np.asarray(counts, dtype=np.int64)
     starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
@@ -140,15 +144,6 @@ def encode_position_runs_concat(
     bounds = np.concatenate([[0], np.cumsum(counts)])
     run_bytes = b_off[bounds[1:]] - b_off[bounds[:-1]]
     return stream.tobytes(), run_bytes.astype(np.int64)
-
-
-def encode_position_runs_flat(flat: np.ndarray, counts: np.ndarray) -> list[bytes]:
-    """(concatenated positions, per-run counts) → per-run varbyte streams,
-    encoded in ONE vectorized pass and sliced at per-run byte offsets."""
-    buf, run_bytes = encode_position_runs_concat(flat, counts)
-    b_off = np.concatenate([[0], np.cumsum(run_bytes)])
-    return [buf[int(b_off[i]) : int(b_off[i + 1])]
-            for i in range(run_bytes.size)]
 
 
 def gather_byte_runs(
@@ -172,23 +167,31 @@ def gather_byte_runs(
     return stream[idx], new_lens
 
 
-def slice_position_stream(buf: bytes, tfs: np.ndarray) -> list[bytes]:
-    """Split a concatenated per-posting position stream back into per-posting
-    byte slices WITHOUT decoding values: varbyte terminator bytes (MSB=0)
-    mark value ends, and posting i holds exactly tfs[i] values. This is what
-    lets merge/append carry positions through decode→re-encode untouched."""
+def position_widths(stream: np.ndarray, tfs: np.ndarray) -> np.ndarray:
+    """Per-posting byte widths of a concatenated position stream, found
+    WITHOUT decoding values: varbyte terminator bytes (MSB=0) mark value
+    ends, and posting i holds exactly tfs[i] values. This is what lets
+    merge carry positions through decode -> re-encode untouched."""
     t = np.asarray(tfs, dtype=np.int64)
-    b = np.frombuffer(buf, dtype=np.uint8)
+    b = np.asarray(stream, dtype=np.uint8)
     ends = np.flatnonzero((b & 0x80) == 0)  # terminal byte of each value
-    if ends.size != int(t.sum()):
+    total = int(t.sum())
+    if ends.size != total:
         raise ValueError(
-            f"position stream holds {ends.size} values, expected {int(t.sum())}"
+            f"position stream holds {ends.size} values, expected {total}"
         )
-    vb = np.concatenate([[0], np.cumsum(t)])  # value index bounds per posting
-    byte_bounds = np.concatenate([[0], ends[vb[1:] - 1] + 1]) if t.sum() else \
-        np.zeros(t.size + 1, dtype=np.int64)
-    return [buf[int(byte_bounds[i]) : int(byte_bounds[i + 1])]
-            for i in range(t.size)]
+    if total == 0:
+        return np.zeros(t.size, dtype=np.int64)
+    cum = np.cumsum(t)
+    hi = np.where(cum > 0, ends[np.maximum(cum - 1, 0)] + 1, 0)
+    return np.diff(hi, prepend=0)
+
+
+def slice_position_stream(buf: bytes, tfs: np.ndarray) -> list[bytes]:
+    """position_widths, as per-posting byte slices of ``buf``."""
+    widths = position_widths(np.frombuffer(buf, dtype=np.uint8), tfs)
+    off = np.concatenate([[0], np.cumsum(widths)]).tolist()
+    return [buf[a:b] for a, b in zip(off[:-1], off[1:])]
 
 
 def decode_positions(buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -211,6 +214,94 @@ def decode_positions(buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarra
     return run + base[row_idx], starts
 
 
+def _slices(stream: np.ndarray, widths: np.ndarray, starts: np.ndarray,
+            ends: np.ndarray) -> list[bytes]:
+    """Block byte slices of a per-value varbyte stream: block i holds the
+    values starts[i]:ends[i]."""
+    off = np.concatenate([[0], np.cumsum(widths)])
+    buf = stream.tobytes()
+    return [buf[a:b] for a, b in zip(off[starts].tolist(), off[ends].tolist())]
+
+
+def encode_runs(
+    term: np.ndarray,
+    salt: np.ndarray,
+    doc: np.ndarray,
+    tf: np.ndarray,
+    dl: np.ndarray,
+    avgdl: float,
+    k1: float,
+    b: float,
+    block_size: int,
+    pos_stream: np.ndarray | None = None,
+    pos_lens: np.ndarray | None = None,
+) -> dict[str, np.ndarray | list]:
+    """Every (term, salt) run of a bucket, sorted by (term, salt, doc) ->
+    POSTINGS columns (schema in module doc), in one vectorized pass.
+
+    Doc gaps reset at block starts (the first gap of a block is stored 0,
+    its first doc travels as first_doc); each varbyte stream is encoded
+    once and sliced at block offsets (value-local encoding makes a slice
+    byte-identical to encoding that block alone); max_tf and max_impact
+    come from one maximum.reduceat. max_impact is the block-max WAND
+    bound: the block's max idf-free impact.
+
+    pos_stream/pos_lens: the per-posting varbyte position runs as ONE
+    flat uint8 stream plus per-posting byte widths, in posting order;
+    positions is None per block when absent.
+    """
+    doc = np.asarray(doc, dtype=np.int64)
+    n = doc.size
+    term = np.asarray(term, dtype=np.int64)
+    salt = np.asarray(salt, dtype=np.int64)
+    ids = doc.view(np.uint64)
+    run_start = np.ones(n, dtype=bool)
+    run_start[1:] = (term[1:] != term[:-1]) | (salt[1:] != salt[:-1])
+    if (ids[1:] <= ids[:-1])[~run_start[1:]].any():
+        raise ValueError("doc ids must be strictly increasing within a posting list")
+    run_starts = np.flatnonzero(run_start)
+    rank = np.arange(n, dtype=np.int64) - np.repeat(
+        run_starts, np.diff(np.append(run_starts, n))
+    )
+    starts = np.flatnonzero(rank % block_size == 0)
+    ends = np.append(starts[1:], n) if n else starts
+
+    t64 = np.asarray(tf, dtype=np.uint64)
+    d64 = np.asarray(dl, dtype=np.uint64)
+    stored = np.diff(ids, prepend=ids[:1])
+    stored[1:] -= np.uint64(1)  # gaps >= 1 stored as gap-1
+    stored[starts] = 0          # a block's first gap is vs first_doc
+    gap_stream, gap_nb = _varbyte_encode_arr(stored)
+    tf_stream, tf_nb = _varbyte_encode_arr(t64 - np.uint64(1))
+    dl_stream, dl_nb = _varbyte_encode_arr(d64)
+    if n:
+        max_tf = np.maximum.reduceat(t64, starts)
+        max_imp = np.maximum.reduceat(bm25_impact(t64, d64, avgdl, k1, b),
+                                      starts)
+    else:
+        max_tf, max_imp = np.zeros(0, np.uint64), np.zeros(0, np.float64)
+    if pos_stream is None:
+        positions = [None] * starts.size
+    else:
+        positions = _slices(np.asarray(pos_stream, dtype=np.uint8),
+                            np.asarray(pos_lens, dtype=np.int64),
+                            starts, ends)
+    return {
+        "term_id": term[starts].astype(np.int32),
+        "salt": salt[starts].astype(np.int32),
+        "block_id": (rank[starts] // block_size).astype(np.int32),
+        "n": (ends - starts).astype(np.int32),
+        "first_doc": doc[starts],
+        "last_doc": doc[ends - 1],
+        "doc_gaps": _slices(gap_stream, gap_nb, starts, ends),
+        "tfs": _slices(tf_stream, tf_nb, starts, ends),
+        "dls": _slices(dl_stream, dl_nb, starts, ends),
+        "positions": positions,
+        "max_tf": max_tf.astype(np.int32),
+        "max_impact": max_imp.astype(np.float64),
+    }
+
+
 def encode_blocks(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
@@ -219,92 +310,18 @@ def encode_blocks(
     k1: float,
     b: float,
     block_size: int = 128,
-    pos_bufs: np.ndarray | None = None,
-    pos_buf: bytes | np.ndarray | None = None,
+    pos_stream: np.ndarray | None = None,
     pos_lens: np.ndarray | None = None,
 ) -> list[dict]:
-    """One term's sorted postings → list of block dicts (schema in module doc).
-
-    max_impact is the block-max WAND bound: max over the block of the
-    idf-free impact; query-time upper bound = idf(term) * max_impact.
-
-    One-pass vectorized over ALL blocks of the run (r3 — the per-block loop
-    of 3 varbyte calls each dominated the index-encode stage): delta gaps
-    computed globally with block-start resets, each varbyte stream encoded
-    once and sliced at per-block byte offsets (value-local encoding makes
-    the slices byte-identical to per-block encoding — parity-tested), and
-    block statistics via maximum.reduceat. The remaining per-block work is
-    dict assembly + byte slicing.
-    """
-    n = doc_ids.size
-    if n == 0:
-        return []
-    ids = np.asarray(doc_ids, dtype=np.uint64)
-    t64 = np.asarray(tfs, dtype=np.uint64)
-    d64 = np.asarray(dls, dtype=np.uint64)
-    starts = np.arange(0, n, block_size, dtype=np.int64)
-    ends = np.minimum(starts + block_size, n)
-
-    gaps = np.diff(ids, prepend=ids[:1])  # first element -> 0
-    nonstart = np.ones(n, dtype=bool)
-    nonstart[starts] = False
-    if (gaps[nonstart] == 0).any():
-        raise ValueError("doc ids must be strictly increasing within a posting list")
-    stored = gaps.copy()
-    stored[starts] = 0       # per-block first gap is vs first_doc (stored 0)
-    stored[nonstart] -= 1    # gaps >= 1 stored as gap-1
-
-    impacts = bm25_impact(t64, d64, avgdl, k1, b)
-    gap_stream, gap_nb = _varbyte_encode_arr(stored)
-    tf_stream, tf_nb = _varbyte_encode_arr(t64 - np.uint64(1))
-    dl_stream, dl_nb = _varbyte_encode_arr(d64)
-    gap_off = np.concatenate([[0], np.cumsum(gap_nb)])
-    tf_off = np.concatenate([[0], np.cumsum(tf_nb)])
-    dl_off = np.concatenate([[0], np.cumsum(dl_nb)])
-    max_imp = np.maximum.reduceat(impacts, starts)
-    max_tf = np.maximum.reduceat(t64, starts)
-    gap_b = gap_stream.tobytes()
-    tf_b = tf_stream.tobytes()
-    dl_b = dl_stream.tobytes()
-
-    pos_off = None
-    pos_b = b""
-    if pos_buf is not None:
-        # flat form (blob staging): the per-posting streams already live
-        # concatenated in posting order; only per-posting byte widths are
-        # needed to slice block boundaries — zero object churn
-        pos_nb = np.asarray(pos_lens, dtype=np.int64)
-        pos_off = np.concatenate([[0], np.cumsum(pos_nb)])
-        pos_b = pos_buf.tobytes() if isinstance(pos_buf, np.ndarray) else pos_buf
-    elif pos_bufs is not None:
-        # per-posting streams are value-local, so the block stream is the
-        # byte concatenation sliced at cumulative per-posting byte widths
-        pos_nb = np.fromiter((len(x) for x in pos_bufs), dtype=np.int64,
-                             count=n)
-        pos_off = np.concatenate([[0], np.cumsum(pos_nb)])
-        pos_b = b"".join(pos_bufs)
-
-    blocks = []
-    for bi in range(starts.size):
-        s, e = int(starts[bi]), int(ends[bi])
-        blocks.append(
-            {
-                "block_id": bi,
-                "n": e - s,
-                "first_doc": int(ids[s]),
-                "last_doc": int(ids[e - 1]),
-                "doc_gaps": gap_b[int(gap_off[s]) : int(gap_off[e])],
-                "tfs": tf_b[int(tf_off[s]) : int(tf_off[e])],
-                "dls": dl_b[int(dl_off[s]) : int(dl_off[e])],
-                "positions": (
-                    pos_b[int(pos_off[s]) : int(pos_off[e])]
-                    if pos_off is not None else None
-                ),
-                "max_tf": int(max_tf[bi]),
-                "max_impact": float(max_imp[bi]),
-            }
-        )
-    return blocks
+    """One term's sorted postings -> list of block dicts: encode_runs over
+    a single run, without the term_id/salt keys."""
+    z = np.zeros(len(doc_ids), dtype=np.int64)
+    cols = encode_runs(z, z, doc_ids, tfs, dls, avgdl, k1, b, block_size,
+                       pos_stream, pos_lens)
+    del cols["term_id"], cols["salt"]
+    return [dict(zip(cols, row))
+            for row in zip(*(v.tolist() if isinstance(v, np.ndarray) else v
+                             for v in cols.values()))]
 
 
 def decode_block(block) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -165,3 +165,110 @@ def test_decode_blocks_batch_matches_per_block():
         assert (dls_b[off:off + n] == want_dls).all()
         off += n
     assert off == ids_b.size
+
+
+def _per_block_reference(term, salt, doc_ids, tfs, dls, pos_runs, avgdl, k1,
+                         b, block_size):
+    """One (term, salt) run, block by block, from the scalar primitives."""
+    blocks = []
+    n = doc_ids.size
+    for s in range(0, n, block_size):
+        e = min(s + block_size, n)
+        ids, t, d = doc_ids[s:e], tfs[s:e], dls[s:e]
+        first, gaps = delta_encode(ids)
+        blocks.append({
+            "term_id": term, "salt": salt,
+            "block_id": s // block_size, "n": int(e - s),
+            "first_doc": int(first), "last_doc": int(ids[-1]),
+            "doc_gaps": varbyte_encode(gaps),
+            "tfs": varbyte_encode(np.asarray(t, dtype=np.uint64) - 1),
+            "dls": varbyte_encode(np.asarray(d, dtype=np.uint64)),
+            "positions": (b"".join(pos_runs[s:e])
+                          if pos_runs is not None else None),
+            "max_tf": int(t.max()),
+            "max_impact": float(bm25_impact(t, d, avgdl, k1, b).max()),
+        })
+    return blocks
+
+
+def _rows(cols):
+    arrays = (v.tolist() if isinstance(v, np.ndarray) else v
+              for v in cols.values())
+    return [dict(zip(cols, row)) for row in zip(*arrays)]
+
+
+def test_encode_runs_matches_per_run_reference():
+    """encode_runs over a whole bucket is byte-identical to encoding each
+    (term, salt) run block by block: run lengths 1, block_size and
+    block_size +- 1, salted runs of one term, doc ids near 2^63 - 1 that
+    drop at run boundaries, tf-only and positional postings."""
+    from pears_fruit_fly_spark.operators.codec import (
+        encode_position_runs_concat,
+        encode_runs,
+    )
+
+    rng = np.random.default_rng(23)
+    big = 2**63 - 1
+    for trial, bs in enumerate([1, 2, 4, 128, 4, 128]):
+        positional = trial % 2 == 1
+        lengths = [1, bs, bs + 1, max(1, bs - 1), 2 * bs + 1, 1, 300]
+        cols = {c: [] for c in ("term", "salt", "doc", "tf", "dl")}
+        streams, widths, want = [], [], []
+        for r, n in enumerate(lengths):
+            term, salt = r // 3, r % 3  # up to 3 salts per term
+            if r % 2:  # ids just below 2^63 - 1
+                ids = np.sort(rng.choice(10**6, size=n, replace=False))
+                ids = (big - 10**6 + ids).astype(np.int64)
+            else:
+                ids = np.sort(rng.choice(5000, size=n, replace=False))
+            ids = ids.astype(np.int64)
+            tf = rng.integers(1, 9, size=n)
+            dl = rng.integers(1, 2**40, size=n)
+            runs = None
+            if positional:
+                flat = np.concatenate([
+                    np.sort(rng.choice(2**20, size=t, replace=False))
+                    for t in tf
+                ])
+                stream, lens = encode_position_runs_concat(flat, tf)
+                off = np.concatenate([[0], np.cumsum(lens)])
+                runs = [stream[off[i]:off[i + 1]] for i in range(n)]
+                streams.append(np.frombuffer(stream, dtype=np.uint8))
+                widths.append(lens)
+            for c, v in zip(cols, (np.full(n, term), np.full(n, salt), ids,
+                                   tf, dl)):
+                cols[c].append(v)
+            want += _per_block_reference(term, salt, ids, tf, dl, runs,
+                                         91.5, 1.2, 0.75, bs)
+        cat = {c: np.concatenate(v) for c, v in cols.items()}
+        got = _rows(encode_runs(
+            cat["term"], cat["salt"], cat["doc"], cat["tf"], cat["dl"],
+            91.5, 1.2, 0.75, bs,
+            np.concatenate(streams) if positional else None,
+            np.concatenate(widths) if positional else None,
+        ))
+        assert got == want, trial
+
+
+def test_encode_runs_edge_inputs():
+    import pytest
+
+    from pears_fruit_fly_spark.operators.codec import encode_runs
+
+    z = np.zeros(0, dtype=np.int64)
+    empty = encode_runs(z, z, z, z, z, 10.0, 1.2, 0.75, 128)
+    assert all(len(v) == 0 for v in empty.values())
+    empty_pos = encode_runs(z, z, z, z, z, 10.0, 1.2, 0.75, 128,
+                            np.zeros(0, dtype=np.uint8), z)
+    assert all(len(v) == 0 for v in empty_pos.values())
+    one = np.ones(4, dtype=np.int64)
+    # a repeated doc id inside one run raises, also across a block edge
+    for bs in (128, 2):
+        with pytest.raises(ValueError, match="strictly increasing"):
+            encode_runs(np.zeros(4), np.zeros(4), np.array([1, 5, 5, 9]),
+                        one, one, 10.0, 1.2, 0.75, bs)
+    # ids that drop (or repeat) where a new (term, salt) run starts are fine
+    cols = encode_runs(np.array([0, 0, 0, 1]), np.array([0, 0, 1, 1]),
+                       np.array([3, 7, 7, 2]), one, one, 10.0, 1.2, 0.75, 128)
+    assert cols["first_doc"].tolist() == [3, 7, 2]
+    assert cols["n"].tolist() == [2, 1, 1]

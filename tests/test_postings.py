@@ -166,7 +166,12 @@ def test_resume_produces_identical_index(spark, pages_ids, vocab, index_dir, tmp
         P.mf.append_manifest_rows = mf_module_attr
 
     assert len(mf.completed_partitions(spark, d2)) == 3
+    from pears_fruit_fly_spark.plans import commitlog as cl
+
+    staging = os.path.join(cl.resolve(d2), "_staging_tokens")
+    assert os.path.isdir(staging)  # kept for the resume
     build_postings(spark, pages_ids, vocab, d2, cfg=cfg)  # resume
+    assert not os.path.exists(staging)  # dropped once every bucket is done
 
     def dump(d):
         rows = read_postings(spark, d).collect()
