@@ -68,12 +68,6 @@ class PostingsConfig:
     bucket_batch_size: int | None = None  # buckets encoded per Spark job;
     # None = all pending in one job (fastest); smaller = finer resume
     # granularity (checkpoint manifest rows are always per-bucket)
-    jvm_tokenizer: bool = False  # False (default) = vectorized Arrow
-    # mapInPandas path: tf AND dl computed narrowly, so the whole staging
-    # write is a SINGLE exchange (the term_bucket repartition) — also the
-    # only path for SentencePiece tokenization. True = all-JVM explode +
-    # broadcast vocab join (one doc_id exchange before the bucket one);
-    # use on clusters where Python workers are scarce.
     staging_filesystem: object | None = None  # optional picklable
     # pyarrow.fs.FileSystem for the worker-side staged-bucket reads of
     # the encode stage (operators/postings._bucket_encoder). On a real
@@ -83,28 +77,13 @@ class PostingsConfig:
     # here and every bucket read resolves through it (scheme prefix is
     # stripped from paths before they are handed over). None (default):
     # pyarrow infers the filesystem from the staging path itself.
-    staging_format: str = "auto"  # "auto" (default) resolves to "blobs"
-    # whenever the build can use it (everything except jvm_tokenizer) and
-    # "rows" otherwise. "rows" = staged tokens are
-    # one parquet row per (doc, term) — the layout every tool can read.
-    # "blobs" = the tokenize kernel packs each batch's tokens into ONE
-    # binary cell per term bucket before they leave the Python worker
-    # (operators/postings.pack_token_blobs), so the Arrow return, the
-    # bucket exchange and the staging parquet move thousands of blob rows
-    # instead of billions of token rows — the r4 BENCH_SCALING
-    # decomposition showed the staging leg flat at 8->32 cores with
-    # per-token rows purely from per-row machinery (UnsafeRow conversion,
-    # exchange hashing, per-row parquet encode). Blocks/postings output is
-    # byte-identical between the two (pinned by test). Positional builds
-    # stage as blobs too (r6, PTB2 layout): the varbyte position runs ride
-    # as one flat stream + per-run byte widths per blob, eliminating the
-    # per-(doc,term) row machinery that dominated the positional build.
     store_positions: bool = False  # True = record token positions per
     # posting (the Lucene .pos analog; enables phrase queries,
     # operators/phrase.py). Positions are delta+varbyte encoded in the
     # narrow tokenize stage, so the build's one wide exchange ships
     # compressed bytes; index grows by ~1-2 bytes per token occurrence.
-    # Forces the Arrow tokenizer (positions need the full token stream).
+    # Staged as PTB2 blobs: each blob carries its varbyte position runs
+    # as one flat stream (operators/postings.pack_token_blobs).
 
 
 INGEST_MIN_CHARS = 1000  # ref: common_crawl_processor/cc_process_wet.py:77

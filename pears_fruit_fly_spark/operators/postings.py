@@ -4,16 +4,19 @@ Not in the reference (its index is a pickled dense hash matrix,
 fruit_fly/hash.py:275-284; merge = unpickle+vstack, hash_pod.py:88-113);
 mandated by BASELINE.json north_rule. Physical design per SURVEY.md §3.2:
 
-  stage 0  tokenize (narrow)      pages(doc_id, text) → tokens(doc_id,
-                                  term_id, tf, dl) via mapInPandas — no shuffle
-  stage 1  stats + salt plan      one hash-agg shuffle for term df/cf;
-                                  head terms (Zipf skew) get n_salts sub-
-                                  partitions (plans/salt.py)
-  stage 2  stage tokens           ONE exchange: repartition by term bucket,
-                                  write staging parquet partitioned by bucket
+  stage 0  tokenize + pack        pages(doc_id, text) → (doc_id, term_id,
+           (narrow)               tf, dl) inside one mapInArrow kernel,
+                                  packed there into one PTB1/PTB2 blob per
+                                  (batch, term bucket) — no shuffle
+  stage 1  stats + salt plan      term df/cf from the per-blob stats
+                                  partials; head terms (Zipf skew) get
+                                  n_salts sub-partitions (plans/salt.py)
+  stage 2  stage blobs            ONE exchange: repartition the blob rows by
+                                  term bucket, write staging parquet
+                                  partitioned by bucket
   stage 3  per-bucket encode      resumable loop over pending buckets: one
                                   encode task per (bucket, shard) spec; the
-                                  task reads its bucket's staged parquet
+                                  task reads its bucket's staged blobs
                                   directly with pyarrow in the worker,
                                   lexsorts (term, salt, doc), emits
                                   compressed blocks → postings dir for that
@@ -34,6 +37,7 @@ note).
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import time
 from collections.abc import Iterator
@@ -76,20 +80,13 @@ TOKENS_SCHEMA = StructType(
     ]
 )
 
-STAGED_TOKENS_SCHEMA = StructType(
-    TOKENS_SCHEMA.fields + [StructField("term_bucket", IntegerType())]
-)
-
 # store_positions builds carry one extra binary per (doc, term): the
 # varbyte-encoded token positions (codec.encode_position_runs layout)
 TOKENS_POS_SCHEMA = StructType(
     TOKENS_SCHEMA.fields + [StructField("pos", BinaryType())]
 )
-STAGED_TOKENS_POS_SCHEMA = StructType(
-    TOKENS_POS_SCHEMA.fields + [StructField("term_bucket", IntegerType())]
-)
 
-# staging_format="blobs": one row per (tokenize batch x term bucket), the
+# Staged tokens: one row per (tokenize batch x term bucket), the
 # four token columns packed columnar into a single binary. The Python->JVM
 # Arrow return and the bucket exchange then move thousands of blob rows
 # instead of one row per (doc, term) — the r4 BENCH_SCALING decomposition
@@ -333,62 +330,6 @@ def tokenize_core(
     return out
 
 
-def tokens_long_jvm(
-    pages: DataFrame, vocab: Vocab, text_col: str = "text"
-) -> DataFrame:
-    """JVM-only tokens_long for the whitespace tokenizer: split → explode →
-    broadcast vocab join → ONE exchange. Zero Python in the path, fully
-    whole-stage-codegen.
-
-    Physical shape: repartition the in-vocab (doc_id, term_id) pairs by
-    doc_id FIRST; HashPartitioning(doc_id) satisfies the clustering
-    requirement of both the (doc_id, term_id) hash agg (subset of grouping
-    keys) and the dl window (exact match), so tf and dl ride the same single
-    exchange. The previous form (agg shuffle on the pair key, then a second
-    Window.partitionBy(doc_id) shuffle of all tf rows) paid two exchanges.
-
-    Semantics identical to tokens_long (verified in tests): split on
-    space/newline, drop empties, drop OOV, tf per (doc, term),
-    dl = total in-vocab tokens. tokens_long (vectorized Arrow path) computes
-    both stats narrowly with NO exchange and is the build default; this is
-    the all-JVM alternative for clusters where Python workers are scarce.
-    """
-    spark = pages.sparkSession
-    vdf = vocab_to_df_minimal(spark, vocab)
-    toks = pages.select(
-        "doc_id",
-        F.explode(
-            F.filter(F.split(F.col(text_col), "[ \n]"), lambda t: t != "")
-        ).alias("term"),
-    )
-    hits = toks.join(F.broadcast(vdf), "term").select("doc_id", "term_id")
-    clustered = hits.repartition("doc_id")
-    tf = clustered.groupBy("doc_id", "term_id").agg(
-        F.count("*").cast("int").alias("tf")
-    )
-    from pyspark.sql.window import Window
-
-    dl = F.sum("tf").over(Window.partitionBy("doc_id")).cast("long")
-    return tf.select("doc_id", "term_id", "tf", dl.alias("dl"))
-
-
-def vocab_to_df_minimal(spark: SparkSession, vocab: Vocab) -> DataFrame:
-    """(term, term_id) dimension for the broadcast tokenize join.
-
-    Schema is explicit: with Arrow conversion disabled (a vanilla session —
-    not our session.py defaults), createDataFrame(pandas) infers numpy int32
-    as LongType, which then poisons the staged-tokens parquet with INT64
-    term_id and makes the stage-2 re-read under the explicit INT32
-    STAGED_TOKENS_SCHEMA throw SchemaColumnConvertNotSupportedException.
-    """
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {"term": vocab.terms, "term_id": np.arange(vocab.size, dtype=np.int32)}
-        ),
-        schema="term string, term_id int",
-    )
-
-
 _XXH_P1 = np.uint64(0x9E3779B185EBCA87)
 _XXH_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
 _XXH_P3 = np.uint64(0x165667B19E3779F9)
@@ -578,7 +519,8 @@ def tokens_blobs(pages: DataFrame, vocab: Vocab, P: int,
                  text_col: str = "text",
                  with_positions: bool = False) -> DataFrame:
     """Fused tokenize + per-bucket blob pack in ONE Python eval: the
-    staging_format="blobs" twin of tokens_long. The pack happens before
+    token source of every build and append segment. The vocab reaches
+    the workers as one broadcast term list. The pack happens before
     rows leave the tokenize worker, so the Arrow return carries
     ~(batches x buckets) blob rows instead of one row per (doc, term).
     with_positions (r6) packs the varbyte position runs as ONE flat
@@ -682,10 +624,9 @@ def _bucket_encoder(staging_dir: str, salt_items: list[tuple[int, int]],
                     avgdl: float, bm25: BM25Config, block_size: int,
                     with_positions: bool = False,
                     flat_staging: bool = False,
-                    filesystem=None,
-                    staging_format: str = "rows"):
+                    filesystem=None):
     """mapInPandas body over encode-task specs (term_bucket, shard,
-    n_shards): each task reads its bucket's staged parquet DIRECTLY with
+    n_shards): each task reads its bucket's staged blobs DIRECTLY with
     pyarrow inside the Python worker, applies the salt plan, sorts with
     one numpy lexsort, and encodes every (term, salt) run of the spec in
     one codec.encode_runs pass — one output frame per spec.
@@ -722,16 +663,14 @@ def _bucket_encoder(staging_dir: str, salt_items: list[tuple[int, int]],
     n_shards concurrent readers (ADVICE r4).
 
     Position runs stay ONE flat uint8 stream + per-posting byte widths
-    end to end, for both staging layouts (PTB2 blobs, or the row layout's
-    binary `pos` column read from its Arrow buffers): vectorized gathers
-    apply the shard mask and the sort, encode_runs slices block
-    boundaries — no per-posting bytes objects.
+    end to end (the PTB2 layout): vectorized gathers apply the shard mask
+    and the sort, encode_runs slices block boundaries — no per-posting
+    bytes objects.
     """
     salt_ids = np.array(sorted(t for t, _ in salt_items), dtype=np.int64)
     salt_ns = np.array(
         [n for _, n in sorted(salt_items)], dtype=np.int64
     )
-    blobs = staging_format == "blobs"
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow.dataset as pads
@@ -741,36 +680,17 @@ def _bucket_encoder(staging_dir: str, salt_items: list[tuple[int, int]],
             gather_byte_runs,
         )
 
-        if blobs:
-            cols = ["blob"]
-        else:
-            cols = ["doc_id", "term_id", "tf", "dl"] + (
-                ["pos"] if with_positions else []
-            )
         field_order = [f.name for f in POSTINGS_SCHEMA.fields]
 
         def _batch_cols(rb):
-            """Uniform per-batch column dicts for both staging layouts:
-            row staging yields the record batch's columns once; blob
-            staging yields one dict per packed blob (the downstream
-            salt/shard/keep logic is layout-agnostic)."""
-            if blobs:
-                for cell in rb.column("blob"):
-                    d, t, tf_, dl_, plens, pstream = unpack_token_blob(
-                        cell.as_py()
-                    )
-                    yield {"doc_id": d, "term_id": t.astype(np.int64),
-                           "tf": tf_, "dl": dl_,
-                           "pos_lens": plens, "pos_stream": pstream}
-            else:
-                out = {c: rb.column(c).to_numpy(zero_copy_only=False)
-                       for c in ("doc_id", "term_id", "tf", "dl")}
-                out["term_id"] = out["term_id"].astype(np.int64)
-                if with_positions:
-                    out["pos_stream"], out["pos_lens"] = _binary_values(
-                        rb.column("pos")
-                    )
-                yield out
+            """One column dict per packed blob of the record batch."""
+            for cell in rb.column("blob"):
+                d, t, tf_, dl_, plens, pstream = unpack_token_blob(
+                    cell.as_py()
+                )
+                yield {"doc_id": d, "term_id": t.astype(np.int64),
+                       "tf": tf_, "dl": dl_,
+                       "pos_lens": plens, "pos_stream": pstream}
 
         def _fs_path(p: str) -> str:
             # with an injected filesystem, paths are handed to it verbatim
@@ -802,7 +722,7 @@ def _bucket_encoder(staging_dir: str, salt_items: list[tuple[int, int]],
                             _fs_path(staging_dir), format="parquet",
                             filesystem=filesystem,
                         ).scanner(
-                            columns=cols,
+                            columns=["blob"],
                             filter=pc_.field("term_bucket") == int(b),
                         )
                     else:
@@ -811,7 +731,7 @@ def _bucket_encoder(staging_dir: str, salt_items: list[tuple[int, int]],
                         scan = pads.dataset(
                             _fs_path(path), format="parquet",
                             filesystem=filesystem,
-                        ).scanner(columns=cols)
+                        ).scanner(columns=["blob"])
                 except FileNotFoundError:
                     continue
                 # stream the bucket batch-by-batch, applying salt + shard
@@ -927,7 +847,6 @@ def build_postings(
     ids (ADVICE r1). True index append is append_postings (segment-based);
     signature append is the incremental pods path (operators/pods.py).
     """
-    _check_staging_cfg(cfg)
     # ONE pass serves the fingerprint check, n_docs AND doc-id extrema —
     # submitted on a driver thread so it runs CONCURRENTLY with the
     # staging job of a fresh build (guide §2.6 overlap): both actions
@@ -941,16 +860,8 @@ def build_postings(
     )
 
     def tokens_factory() -> DataFrame:
-        if resolve_staging_format(cfg) == "blobs":
-            # fused tokenize + per-bucket pack in one Python eval
-            return tokens_blobs(pages_with_ids, vocab, cfg.num_partitions,
-                                text_col,
-                                with_positions=cfg.store_positions)
-        if cfg.jvm_tokenizer and not cfg.store_positions:
-            return tokens_long_jvm(pages_with_ids, vocab, text_col)
-        # positions need the full token stream — only the Arrow path has it
-        return tokens_long(pages_with_ids, vocab, text_col,
-                           with_positions=cfg.store_positions)
+        return tokens_blobs(pages_with_ids, vocab, cfg.num_partitions,
+                            text_col, with_positions=cfg.store_positions)
 
     info = _build_from_tokens(
         spark, tokens_factory, None,
@@ -962,34 +873,6 @@ def build_postings(
 
     invalidate_index_cache(index_dir)
     return info
-
-
-def resolve_staging_format(cfg: PostingsConfig) -> str:
-    """"auto" (the default) -> "blobs" whenever the build can use it; the
-    packed format packs inside the Python tokenize kernel, so JVM-tokenized
-    builds fall back to row staging. Positional builds use blobs too (r6:
-    the PTB2 layout carries the varbyte position runs as one flat stream
-    per blob — previously the per-(doc,term) row staging was the
-    positional build's dominant, non-scaling stage). Explicit values pass
-    through (validated by _check_staging_cfg)."""
-    if cfg.staging_format == "auto":
-        return "rows" if cfg.jvm_tokenizer else "blobs"
-    return cfg.staging_format
-
-
-def _check_staging_cfg(cfg: PostingsConfig) -> None:
-    """Fail fast on unusable staging configurations — BEFORE the
-    fingerprint scan runs, not three stages into the build."""
-    if cfg.staging_format not in ("auto", "rows", "blobs"):
-        raise ValueError(
-            f"staging_format must be 'auto', 'rows' or 'blobs', "
-            f"got {cfg.staging_format!r}"
-        )
-    if cfg.staging_format == "blobs" and cfg.jvm_tokenizer:
-        raise ValueError(
-            "staging_format='blobs' packs inside the Python tokenize "
-            "kernel and cannot combine with jvm_tokenizer=True"
-        )
 
 
 def _live_dir_for_build(index_dir: str) -> str:
@@ -1023,10 +906,11 @@ def _build_from_tokens(
     cfg: PostingsConfig,
     fp_future=None,
 ) -> dict:
-    """Stages 0-3 of the build from a long-format token source (callable so
-    the resume path never constructs the tokenize plan). Shared by
-    build_postings (tokens from pages) and merge_segments (tokens decoded
-    from existing segment postings — the multi-way posting merge).
+    """Stages 0-3 of the build from a TOKEN_BLOBS_SCHEMA source (callable
+    so the resume path never constructs the tokenize plan). Shared by
+    build_postings and append_postings (blobs tokenized from pages) and
+    merge_segments (blobs decoded from existing segment postings — the
+    multi-way posting merge).
 
     fp_future (r6): a Future resolving to the corpus-fingerprint row —
     when given, the eager fingerprint/n_docs/min_doc/max_doc args are
@@ -1073,15 +957,9 @@ def _build_from_tokens(
         # instead of re-tokenizing. Salting moves to encode time — the salt
         # is a pure function of (doc_id, n_salts) so it needs no extra pass.
         ts = time.time()
-        tokens = tokens_factory()
-        # the factory's output schema decides the staging format: blob
-        # sources (tokens_blobs / rows_to_blobs) arrive pre-bucketed by
-        # the Python-side xxhash64 twin, row sources get the JVM bucket
-        # expression here — both agree bit for bit (parity test-pinned)
-        blob_staging = "blob" in tokens.columns
-        bucketed = tokens if blob_staging else tokens.withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term_id"), F.lit(P)).cast("int")
-        )
+        # blob rows arrive pre-bucketed by the Python-side xxhash64 twin
+        # of the JVM bucket expression (parity test-pinned)
+        blobs = tokens_factory()
         # deferred fingerprint (fp_future still in flight): n_docs is
         # unknown at layout time — take the partitioned layout, which is
         # measured equivalent at flat's target sizes under blob staging
@@ -1095,7 +973,7 @@ def _build_from_tokens(
             # term_bucket as a physical column; encode tasks filter their
             # bucket from the whole (small) staging (r4)
             (
-                bucketed.repartition(max(1, min(P, 8)))
+                blobs.repartition(max(1, min(P, 8)))
                 .write.mode("overwrite")
                 .parquet(staging)
             )
@@ -1104,7 +982,7 @@ def _build_from_tokens(
             # every task writes exactly one bucket directory (avoids P^2
             # small files).
             (
-                bucketed.repartition(P, "term_bucket")
+                blobs.repartition(P, "term_bucket")
                 .write.mode("overwrite")
                 .partitionBy("term_bucket")
                 .parquet(staging)
@@ -1115,19 +993,9 @@ def _build_from_tokens(
         # ---- stage 2: stats from the staged tokens (compact re-read) ----
         # explicit schema: an empty corpus leaves no parquet footers to
         # infer from, but must still produce a valid (empty) index
-        if blob_staging:
-            staged_schema = TOKEN_BLOBS_SCHEMA
-        else:
-            staged_schema = (STAGED_TOKENS_POS_SCHEMA if cfg.store_positions
-                             else STAGED_TOKENS_SCHEMA)
-        staged_tokens = spark.read.schema(staged_schema).parquet(staging)
-        if blob_staging:
-            term_stats = blob_term_stats(staged_tokens)
-        else:
-            term_stats = staged_tokens.groupBy("term_id").agg(
-                F.count("*").alias("df"), F.sum("tf").alias("cf")
-            )
-        term_stats = term_stats.withColumn(
+        term_stats = blob_term_stats(
+            spark.read.schema(TOKEN_BLOBS_SCHEMA).parquet(staging)
+        ).withColumn(
             # stored alongside stats so query-time partition pruning needs
             # no extra hash job (bm25.py reads df + bucket in ONE lookup)
             "term_bucket", F.pmod(F.xxhash64("term_id"), F.lit(P)).cast("int")
@@ -1188,7 +1056,7 @@ def _build_from_tokens(
             "max_doc": int(max_doc) if max_doc is not None else None,
             "store_positions": bool(cfg.store_positions),
             "flat_staging": bool(flat_staging),
-            "staging_format": "blobs" if blob_staging else "rows",
+            "staging_format": "blobs",
         }
         mf.write_build_info(index_dir, info)
     else:
@@ -1222,6 +1090,16 @@ def _build_from_tokens(
         .agg(F.sum("df").alias("rows"))
         .collect()
     }
+    pending = [b for b in sorted(bucket_rows) if b not in done]
+    # only packed-blob staging can be encoded; a build info without the
+    # key predates blobs, so its staging holds one row per (doc, term)
+    staged_as = info.get("staging_format", "rows")
+    if pending and staged_as != "blobs":
+        raise ValueError(
+            f"{index_dir} holds an interrupted build whose tokens are "
+            f"staged as {staged_as!r}; only packed-blob staging can be "
+            "resumed. Rebuild into a fresh index_dir (or delete this one)."
+        )
     # salt plan to the workers as a plain sorted list: skewed terms only
     # (df > threshold), so it is vocab-of-head-terms sized — the same
     # thing the old broadcast-join shipped. Fresh builds reuse the fused
@@ -1246,9 +1124,7 @@ def _build_from_tokens(
         # staging as it was written)
         flat_staging=bool(info.get("flat_staging", False)),
         filesystem=cfg.staging_filesystem,
-        staging_format=info.get("staging_format", "rows"),
     )
-    pending = [b for b in sorted(bucket_rows) if b not in done]
     batch_size = cfg.bucket_batch_size or len(pending) or 1
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -1403,26 +1279,15 @@ def append_postings(
             f"append vocabulary size {vocab.size} != base "
             f"{base_info.get('vocab_size')} — segments must share the vocab"
         )
-    seg_cfg = PostingsConfig(
+    # segments inherit the base layout — a positional index stays
+    # phrase-queryable across its merged-on-read view
+    seg_cfg = dataclasses.replace(
+        cfg or PostingsConfig(),
         block_size=base_info["block_size"],
         num_partitions=base_info["num_partitions"],
         skew_df_threshold=base_info["skew_df_threshold"],
-        max_docs_per_subpartition=(cfg or PostingsConfig()).max_docs_per_subpartition,
-        bucket_batch_size=(cfg or PostingsConfig()).bucket_batch_size,
-        jvm_tokenizer=(cfg or PostingsConfig()).jvm_tokenizer,
-        flat_staging_max_docs=(cfg or PostingsConfig()).flat_staging_max_docs,
-        encode_rows_per_task=(cfg or PostingsConfig()).encode_rows_per_task,
-        staging_filesystem=(cfg or PostingsConfig()).staging_filesystem,
-        # the caller's choice passes through untouched and resolves via
-        # resolve_staging_format exactly like a fresh build (ONE source
-        # of truth for the rule); positional segments stage as blobs too
-        # (PTB2, r6)
-        staging_format=(cfg or PostingsConfig()).staging_format,
-        # segments inherit the base layout — a positional index stays
-        # phrase-queryable across its merged-on-read view
         store_positions=bool(base_info.get("store_positions", False)),
     )
-    _check_staging_cfg(seg_cfg)
     fp_row = _corpus_fingerprint_row(new_pages_with_ids, text_col)
     if fp_row["n"] == 0:
         raise ValueError("append_postings called with an empty page set")
@@ -1446,14 +1311,9 @@ def append_postings(
     bm25 = BM25Config(base_info["k1"], base_info["b"])
 
     def tokens_factory() -> DataFrame:
-        if resolve_staging_format(seg_cfg) == "blobs":
-            return tokens_blobs(new_pages_with_ids, vocab,
-                                seg_cfg.num_partitions, text_col,
-                                with_positions=seg_cfg.store_positions)
-        if seg_cfg.jvm_tokenizer and not seg_cfg.store_positions:
-            return tokens_long_jvm(new_pages_with_ids, vocab, text_col)
-        return tokens_long(new_pages_with_ids, vocab, text_col,
-                           with_positions=seg_cfg.store_positions)
+        return tokens_blobs(new_pages_with_ids, vocab,
+                            seg_cfg.num_partitions, text_col,
+                            with_positions=seg_cfg.store_positions)
 
     info = _build_from_tokens(
         spark, tokens_factory, fingerprint,
@@ -1641,9 +1501,9 @@ def merge_segments(spark: SparkSession, index_dir: str,
     (tested).
 
     The merged index keeps the base's layout (block size, buckets, salt
-    plan inputs, positions) and always stages as blobs, whatever the
-    base's staging format. Tombstones are masked inside the decode kernel
-    when they fit TOMBSTONE_DRIVER_MAX, else anti-joined
+    plan inputs, positions). Only posting blocks are read, so a base built
+    with any staging layout merges. Tombstones are masked inside the
+    decode kernel when they fit TOMBSTONE_DRIVER_MAX, else anti-joined
     (_decoded_tokens_factory). tombstones: the (count, ids) pair of
     tombstone_ids, when the caller already read it.
 
@@ -1690,7 +1550,6 @@ def merge_segments(spark: SparkSession, index_dir: str,
             PostingsConfig().max_docs_per_subpartition,
         ),
         store_positions=bool(base.get("store_positions", False)),
-        staging_format="blobs",
     )
     decoded = _decoded_tokens_factory(
         spark, [live] + segs, cfg.store_positions, cfg.num_partitions,

@@ -84,17 +84,9 @@ def main() -> None:
     docs = pages.select(
         F.monotonically_increasing_id().alias("doc_id"), "text"
     )
-    cfgp = PostingsConfig(num_partitions=16, skew_df_threshold=5000,
-                          store_positions=True)
-    fmt = P.resolve_staging_format(cfgp)
-    if fmt == "blobs":
-        toks = P.tokens_blobs(docs, vocab, 16, with_positions=True)
-        staged = toks.repartition(16, "term_bucket")
-    else:
-        toks = P.tokens_long(docs, vocab, with_positions=True)
-        staged = toks.withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term_id"), F.lit(16)).cast("int")
-        ).repartition(16, "term_bucket")
+    staged = P.tokens_blobs(docs, vocab, 16, with_positions=True).repartition(
+        16, "term_bucket"
+    )
     dump("positional_staging", staged)
 
     # WAND scatter plan over a small real index

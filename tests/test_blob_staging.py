@@ -1,9 +1,11 @@
-"""staging_format="blobs": packed-token staging must be indistinguishable
-from row staging in every observable — postings blocks, term stats, BM25
-ranks — and its Python-side bucket hash must agree bit-for-bit with the
-JVM expression used by query-time partition pruning."""
+"""Packed-blob token staging: the blobs must carry the exact token table,
+a build must write the same index tree as the row staging it replaced
+(golden digests), and the Python-side bucket hash must agree bit-for-bit
+with the JVM expression used by query-time partition pruning."""
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 import pytest
@@ -165,7 +167,21 @@ def test_tokens_blobs_positional_equals_tokens_long(spark, pages_ids, vocab):
     assert got == want
 
 
-# ------------------------------------------------- build/append identity
+# ------------------------------------------------ golden tree digests
+
+# sha256 of each shape's sorted _postings_snapshot (every block's bytes
+# plus the term_stats rows). Recorded when builds could still stage one
+# row per (doc, term) as well as packed blobs, with the row-staged and the
+# blob-staged trees asserted equal first: a match here means the one
+# remaining staging path still writes the index the row path wrote.
+GOLDEN_TF_ONLY = (
+    "bbd9ca83a537685cb35230d2c4274f44098672c7a93e82b44994d0a3eaf327dc")
+GOLDEN_POSITIONAL = (
+    "eb0dd8c1aa4db143b1742161285c8c34436e7676589cea4170f932026b59fed5")
+# merge rewrites base + segment into the tree a fresh build of the same
+# corpus writes, so this equals GOLDEN_TF_ONLY
+GOLDEN_APPEND_MERGE = GOLDEN_TF_ONLY
+
 
 def _postings_snapshot(spark, index_dir):
     blocks = {}
@@ -185,119 +201,72 @@ def _postings_snapshot(spark, index_dir):
     return blocks, stats
 
 
-def _cfg(fmt):
+def _tree_digest(spark, index_dir) -> str:
+    blocks, stats = _postings_snapshot(spark, index_dir)
+    h = hashlib.sha256()
+    h.update(repr(sorted(blocks.items())).encode())
+    h.update(repr(sorted(stats.items())).encode())
+    return h.hexdigest()
+
+
+def _cfg(**kw):
     return PostingsConfig(
         num_partitions=8, skew_df_threshold=50, max_docs_per_subpartition=40,
-        staging_format=fmt,
+        **kw,
     )
 
 
 @pytest.fixture(scope="module")
-def twin_indexes(spark, pages_ids, vocab, tmp_path_factory):
-    """The same corpus built through both staging formats."""
-    dirs = {}
-    for fmt in ("rows", "blobs"):
-        d = str(tmp_path_factory.mktemp(f"idx_{fmt}"))
-        build_postings(spark, pages_ids, vocab, d, cfg=_cfg(fmt))
-        dirs[fmt] = d
-    return dirs
+def tf_index(spark, pages_ids, vocab, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("golden_tf"))
+    build_postings(spark, pages_ids, vocab, d, cfg=_cfg())
+    return d
 
 
-def test_blob_build_identical_to_rows(spark, twin_indexes):
-    rows_snap = _postings_snapshot(spark, twin_indexes["rows"])
-    blob_snap = _postings_snapshot(spark, twin_indexes["blobs"])
-    assert blob_snap[0] == rows_snap[0]  # every block byte-identical
-    assert blob_snap[1] == rows_snap[1]  # term stats identical
+@pytest.fixture(scope="module")
+def pos_index(spark, pages_ids, vocab, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("golden_pos"))
+    build_postings(spark, pages_ids, vocab, d,
+                   cfg=_cfg(store_positions=True))
+    return d
 
 
-def test_blob_positional_build_identical_to_rows(spark, pages_ids, vocab,
-                                                 tmp_path_factory):
-    """A store_positions build staged through PTB2 blobs must be
-    byte-identical — including the positions stream of every block — to
-    the row-staged build (r6: positional blob staging)."""
-    snaps = {}
-    for fmt in ("rows", "blobs"):
-        d = str(tmp_path_factory.mktemp(f"posidx_{fmt}"))
-        cfg = PostingsConfig(
-            num_partitions=8, skew_df_threshold=50,
-            max_docs_per_subpartition=40, staging_format=fmt,
-            store_positions=True,
-        )
-        build_postings(spark, pages_ids, vocab, d, cfg=cfg)
-        assert mf.read_build_info(d)["staging_format"] == fmt
-        snaps[fmt] = _postings_snapshot(spark, d)
-    assert snaps["blobs"][0] == snaps["rows"][0]
-    assert snaps["blobs"][1] == snaps["rows"][1]
-    # sanity: positions actually present
-    assert any(v[6] for v in snaps["blobs"][0].values())
+def test_blob_build_identical_to_rows(spark, tf_index):
+    """A tf-only build writes the tree the row-staged build wrote."""
+    assert _tree_digest(spark, tf_index) == GOLDEN_TF_ONLY
 
 
-def test_blob_build_info_records_format(spark, twin_indexes):
-    assert mf.read_build_info(twin_indexes["blobs"])["staging_format"] == "blobs"
-    assert mf.read_build_info(twin_indexes["rows"])["staging_format"] == "rows"
+def test_blob_positional_build_identical_to_rows(spark, pos_index):
+    """A store_positions build (PTB2 blobs) writes the tree — positions
+    stream of every block included — the row-staged build wrote."""
+    blocks, _ = _postings_snapshot(spark, pos_index)
+    assert all(v[6] for v in blocks.values())  # positions really present
+    assert _tree_digest(spark, pos_index) == GOLDEN_POSITIONAL
+
+
+def test_blob_build_info_records_format(tf_index, pos_index):
+    assert mf.read_build_info(tf_index)["staging_format"] == "blobs"
+    assert mf.read_build_info(pos_index)["staging_format"] == "blobs"
+
+
+def test_blob_accepts_positions(pos_index):
+    """store_positions stages through PTB2 blobs: the build records both
+    the positional layout and the blob format."""
+    info = mf.read_build_info(pos_index)
+    assert info["store_positions"] is True
+    assert info["staging_format"] == "blobs"
 
 
 def test_blob_append_and_merge_identical(spark, pages_ids, vocab,
                                          tmp_path_factory):
-    """Base+append+merge through blob staging == the same through rows."""
+    """Base + append + merge writes the tree the row-staged flow wrote."""
     base = pages_ids.filter(F.col("doc_id") < 200)
     extra = (
         pages_ids.filter(F.col("doc_id") >= 200)
         .withColumn("doc_id", F.col("doc_id").cast("long"))
     )
-    snaps = {}
-    for fmt in ("rows", "blobs"):
-        d = str(tmp_path_factory.mktemp(f"app_{fmt}"))
-        build_postings(spark, base, vocab, d, cfg=_cfg(fmt))
-        append_postings(spark, extra, vocab, d, cfg=_cfg(fmt))
-        merge_segments(spark, d)
-        snaps[fmt] = _postings_snapshot(spark, d)
-    assert snaps["blobs"][0] == snaps["rows"][0]
-    assert snaps["blobs"][1] == snaps["rows"][1]
-
-
-# ------------------------------------------------------------ validation
-
-def test_blob_accepts_positions():
-    """r6: explicit blobs + store_positions is a supported combination
-    (PTB2 layout)."""
-    from pears_fruit_fly_spark.operators.postings import _check_staging_cfg
-    _check_staging_cfg(
-        PostingsConfig(staging_format="blobs", store_positions=True)
-    )
-
-
-def test_blob_rejects_jvm_tokenizer():
-    from pears_fruit_fly_spark.operators.postings import _check_staging_cfg
-    with pytest.raises(ValueError, match="jvm"):
-        _check_staging_cfg(
-            PostingsConfig(staging_format="blobs", jvm_tokenizer=True)
-        )
-
-
-def test_bad_staging_format_rejected():
-    from pears_fruit_fly_spark.operators.postings import _check_staging_cfg
-    with pytest.raises(ValueError, match="staging_format"):
-        _check_staging_cfg(PostingsConfig(staging_format="zip"))
-
-
-def test_auto_resolution():
-    """The default "auto" picks blobs whenever the build can use it —
-    including positional builds (r6) — and falls back to rows only for
-    JVM-tokenized builds (explicit "blobs" there errors instead — no
-    silent fallback)."""
-    from pears_fruit_fly_spark.operators.postings import (
-        _check_staging_cfg,
-        resolve_staging_format,
-    )
-    assert PostingsConfig().staging_format == "auto"
-    assert resolve_staging_format(PostingsConfig()) == "blobs"
-    assert resolve_staging_format(
-        PostingsConfig(store_positions=True)) == "blobs"
-    assert resolve_staging_format(
-        PostingsConfig(jvm_tokenizer=True)) == "rows"
-    assert resolve_staging_format(
-        PostingsConfig(staging_format="rows")) == "rows"
-    # auto never errors
-    _check_staging_cfg(PostingsConfig(store_positions=True))
-    _check_staging_cfg(PostingsConfig(jvm_tokenizer=True))
+    d = str(tmp_path_factory.mktemp("golden_app"))
+    build_postings(spark, base, vocab, d, cfg=_cfg())
+    append_postings(spark, extra, vocab, d, cfg=_cfg())
+    merge_segments(spark, d)
+    assert _tree_digest(spark, d) == GOLDEN_APPEND_MERGE

@@ -49,50 +49,18 @@ def test_hamming_topk_compiles_to_take_ordered(spark, pages_df, vocab, fly_cfg):
     assert "Exchange rangepartitioning" not in plan
 
 
-def test_vocab_join_is_broadcast(spark, pages_df, vocab):
-    from pears_fruit_fly_spark.operators.docids import assign_doc_ids
-    from pears_fruit_fly_spark.operators.postings import tokens_long_jvm
-    from pears_fruit_fly_spark.sources.wet import dedup_latest
-
-    clean = dedup_latest(pages_df)
-    pages_ids = clean.join(assign_doc_ids(clean, "url"), "url")
-    plan = (
-        tokens_long_jvm(pages_ids, vocab)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "BroadcastExchange" in plan
-
-
 def test_staging_write_single_exchange(spark, pages_df, vocab):
-    """The index-build staging plan (VERDICT r1 #5): the default (vectorized
-    Arrow) token path computes tf AND dl narrowly, so the only wide exchange
-    in the whole staging write is the term_bucket repartition."""
-    from pears_fruit_fly_spark.operators.postings import tokens_long
+    """The index-build staging plan (VERDICT r1 #5): the tokenize + pack
+    kernel computes tf AND dl narrowly and emits blob rows already tagged
+    with their term bucket, so the only wide exchange in the whole staging
+    write is the term_bucket repartition — and no join at all."""
+    from pears_fruit_fly_spark.operators.postings import tokens_blobs
 
     pages_ids = pages_df.withColumn("doc_id", F.xxhash64("url"))
-    staged = (
-        tokens_long(pages_ids, vocab)
-        .withColumn("term_bucket",
-                    F.pmod(F.xxhash64("term_id"), F.lit(32)).cast("int"))
-        .repartition(32, "term_bucket")
-    )
+    staged = tokens_blobs(pages_ids, vocab, 32).repartition(32, "term_bucket")
     plan = staged._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_jvm_token_path_tf_and_dl_share_one_exchange(spark, pages_df, vocab):
-    """tokens_long_jvm: HashPartitioning(doc_id) from the explicit repartition
-    must satisfy BOTH the (doc_id, term_id) agg and the dl window — the old
-    shape paid a second Window.partitionBy(doc_id) shuffle of all tf rows."""
-    from pears_fruit_fly_spark.operators.postings import tokens_long_jvm
-
-    pages_ids = pages_df.withColumn("doc_id", F.xxhash64("url"))
-    plan = (
-        tokens_long_jvm(pages_ids, vocab)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("Exchange hashpartitioning") == 1
+    assert "BroadcastHashJoin" not in plan
 
 
 def test_wand_scan_is_partition_pruned(spark, pages_df, vocab, tmp_path_factory):

@@ -185,6 +185,43 @@ def test_resume_produces_identical_index(spark, pages_ids, vocab, index_dir, tmp
     assert dump(d2) == dump(index_dir)
 
 
+def test_resume_refuses_row_staging(spark, pages_ids, vocab, tmp_path,
+                                    monkeypatch):
+    """An interrupted build whose staging is not packed blobs (recorded as
+    "rows", or no format key at all: a build from before blob staging)
+    must fail with a pointer to a fresh index_dir, not hand row parquet
+    to the blob encoder."""
+    d = str(tmp_path / "rows_staged")
+    cfg = PostingsConfig(num_partitions=8, bucket_batch_size=1)
+
+    class Boom(Exception):
+        pass
+
+    orig = mf.append_manifest_rows
+
+    def exploding(spark_, dir_, rows):
+        orig(spark_, dir_, rows)
+        raise Boom()
+
+    monkeypatch.setattr(mf, "append_manifest_rows", exploding)
+    with pytest.raises(Boom):
+        build_postings(spark, pages_ids, vocab, d, cfg=cfg)
+    monkeypatch.undo()
+    assert len(mf.completed_partitions(spark, d)) == 1
+
+    info = mf.read_build_info(d)
+    assert info["staging_format"] == "blobs"
+    for fmt in ("rows", None):
+        if fmt is None:
+            del info["staging_format"]
+        else:
+            info["staging_format"] = fmt
+        mf.write_build_info(d, info)
+        with pytest.raises(ValueError, match="fresh index_dir"):
+            build_postings(spark, pages_ids, vocab, d, cfg=cfg)
+    assert len(mf.completed_partitions(spark, d)) == 1
+
+
 def test_recall_with_changed_corpus_fails_fast(spark, pages_ids, vocab, tmp_path):
     """ADVICE r1: a completed build re-called with different pages must NOT
     silently resume (doc ids would be reassigned against stale postings)."""
